@@ -1,0 +1,35 @@
+package graftbench
+
+/** Minimal JSON writer for the harness's result files: maps, sequences,
+  * numbers, strings, booleans and None/null. Non-finite doubles are
+  * written as null so the file always parses. */
+object Json {
+  def apply(v: Any): String = v match {
+    case null | None       => "null"
+    case Some(x)           => apply(x)
+    case s: String         => quote(s)
+    case b: Boolean        => b.toString
+    case d: Double         => if (d.isNaN || d.isInfinite) "null" else d.toString
+    case f: Float          => apply(f.toDouble)
+    case n: Number         => n.toString
+    case m: scala.collection.Map[_, _] =>
+      m.map { case (k, x) => quote(k.toString) + ":" + apply(x) }
+        .mkString("{", ",", "}")
+    case s: Iterable[_]    => s.map(apply).mkString("[", ",", "]")
+    case a: Array[_]       => apply(a.toSeq)
+    case other             => quote(other.toString)
+  }
+
+  private def quote(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  def write(path: String, v: Any): Unit =
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(path), apply(v))
+}
