@@ -28,8 +28,8 @@ import org.apache.spark.sql.functions._
   *    neighborhoods.
   *
   * Artifact: one JSON with per-scale rows. Run:
-  * `SPARK_GRAFT_CPUS=32 sbt "runMain graft.AnnClusteredStress
-  *  [baseSfDir] [factor] [outJson]"` (keep the host quiet).
+  * `SPARK_GRAFT_CPUS=32 sbt "runMain graft.ScaleStress ann [baseSfDir]
+  *  [factor] [outJson] [mode]"` (keep the host quiet).
   */
 object AnnClusteredStress {
 
@@ -77,37 +77,46 @@ object AnnClusteredStress {
     * nothing once the corpus symmetry is gone). */
   private val L3IncShare = 0.70
 
+  /** The near-dup law: distinct ordered pairs of a joined frame
+    * (query_id, neighbor_id, qe, ce, qn2, cn2) whose exact cosine clears
+    * the declared threshold of SimilarityQueries' near-dup family, 0.4. */
+  private def ndPairs(df: DataFrame): Set[(Long, Long)] = df
+    .filter(col("query_id") =!= col("neighbor_id"))
+    .selectExpr("query_id", "neighbor_id",
+      "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
+    .filter(col("cosine") >= 0.4)
+    .select("query_id", "neighbor_id").collect()
+    .map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  /** REMOVAL recall — the decision metric of a dedup pass: a row with
+    * ANY true lower-id duplicate is removed as long as the blocker
+    * finds ANY ONE lower-id duplicate for it (every found pair is a
+    * true pair; which one is immaterial to removal). */
+  private def removalRecall(truth: Set[(Long, Long)],
+      got: Set[(Long, Long)]): Double = {
+    val remTruth = truth.collect { case (q, nb) if nb < q => q }
+    val remGot = got.collect { case (q, nb) if nb < q => q }
+    if (remTruth.isEmpty) 1.0
+    else (remTruth & remGot).size.toDouble / remTruth.size
+  }
+
   private final case class ScaleRow(tag: String, n: Long, json: String)
 
-  def main(args: Array[String]): Unit = {
+  /** `ScaleStress ann [baseSfDir] [factor] [outJson] [mode]`. */
+  def run(spark: SparkSession, args: Array[String]): Unit = {
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
-    val outJson = args.lift(2).getOrElse("/root/repo/SCALE_clustered_ann.json")
+    val outJson = args.lift(2).getOrElse("SCALE_clustered_ann.json")
     // optional 4th arg: generator mode — "clustered" (default) or
     // "clustered_vocabrich" (r12: the combined arm, vocab-rich
     // documents beside the clustered embeddings, so the retention
     // table can be recomputed on the corpus whose TEXT side carries no
     // 31-word-vocabulary entropy bound)
     val mode = args.lift(3).getOrElse("clustered")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     functions.GraftFunctions.register(spark)
     functions.TextHashFunctions.register(spark)
-
-    val root = s"${ProcScratch.base}/clustered_ann"
-    val dir1 = s"$root/sf1x"
-    val dirN = s"$root/sf${factor}x"
-    println(s"[ann-clustered] generating mode=$mode 1x at $dir1 and " +
-      s"${factor}x at $dirN from $baseDir")
-    ScaleStress.generate(spark, baseDir, dir1, 1, mode = mode)
-    ScaleStress.generate(spark, baseDir, dirN, factor, mode = mode)
+    val Seq(dir1, dirN) = ScaleStress.corpora(spark, baseDir, "clustered_ann",
+      (1, mode), (factor, mode))
 
     val rows = Seq(("1x", dir1), (s"${factor}x", dirN)).map { case (tag, dir) =>
       val e = spark.read.parquet(s"$dir/embeddings.parquet")
@@ -120,19 +129,20 @@ object AnnClusteredStress {
         s"CAST(graft_ivf_cell_h(embedding, $sc, $mc) AS INT) AS cell",
         s"graft_lsh_bucket(embedding, $planes) AS bucket").persist()
 
-      def occ(c: String): (Int, Long, Long, Double) = {
-        val counts = assigned.groupBy(c).count()
+      // occupancy of a blocking key: (keys used, max, median, Σ count²)
+      def occ(df: DataFrame, key: String*): (Int, Long, Long, Double) = {
+        val counts = df.groupBy(key.head, key.tail: _*).count()
           .select("count").collect().map(_.getLong(0)).sorted
         val sumSq = counts.map(x => x.toDouble * x).sum
         (counts.length, counts.last, counts(counts.length / 2), sumSq)
       }
-      val (cellsUsed, cellMax, cellMed, cellSq) = occ("cell")
-      val (bUsed, bMax, bMed, bSq) = occ("bucket")
+      val (cellsUsed, cellMax, cellMed, cellSq) = occ(assigned, "cell")
+      val (bUsed, bMax, bMed, bSq) = occ(assigned, "bucket")
 
       // recall@3 on a ~100-query sample vs brute-force ground truth
       val qstep = math.max(1L, n / 100)
-      val q = assigned
-        .filter(pmod(hash(col("vec_id"), lit(77)), lit(qstep)) === 0)
+      val sampled = pmod(hash(col("vec_id"), lit(77)), lit(qstep)) === 0
+      val q = assigned.filter(sampled)
         .selectExpr("vec_id AS query_id", "embedding AS qe", "n2 AS qn2",
           "cell",
           s"CAST(graft_ivf_cell_h2(embedding, $sc, $mc) AS INT) AS cell2")
@@ -154,11 +164,12 @@ object AnnClusteredStress {
         col("cell").as("probe"))
       val probe2 = probe1.unionByName(q.select(col("query_id"), col("qe"),
         col("qn2"), col("cell2").as("probe")))
-      def recallOf(qs: DataFrame): Double = {
-        val got = top3(qs.join(cand, col("probe") === col("ccell"))
-          .dropDuplicates("query_id", "neighbor_id"))
+      def recall(got: Set[(Long, Long)]): Double =
         (truth & got).size.toDouble / truth.size
-      }
+      // multi-probe recall: a neighbor reached through two probes counts once
+      def recallOf(qs: DataFrame, c: DataFrame = cand): Double =
+        recall(top3(qs.join(c, col("probe") === col("ccell"))
+          .dropDuplicates("query_id", "neighbor_id")))
       val r1 = recallOf(probe1)
       val r2 = recallOf(probe2)
 
@@ -166,34 +177,25 @@ object AnnClusteredStress {
       // same corpus: occupancy must track density; recall must hold
       val bal = ops.SimilarityQueries.trainedCells(spark, dir,
         probe2 = true, probe3 = true)
-      val bCounts = bal.groupBy("cell").count()
-        .select("count").collect().map(_.getLong(0)).sorted
-      val (balUsed, balMax, balMed) =
-        (bCounts.length, bCounts.last, bCounts(bCounts.length / 2))
-      val balSq = bCounts.map(x => x.toDouble * x).sum
-      val balQ = bal.filter(pmod(hash(col("vec_id"), lit(77)), lit(qstep)) === 0)
+      val (balUsed, balMax, balMed, balSq) = occ(bal, "cell")
+      val balQ = bal.filter(sampled)
         .selectExpr("vec_id AS query_id", "embedding AS qe", "n2 AS qn2",
           "cell AS probe").persist()
       val balQ2 = balQ.unionByName(
-        bal.filter(pmod(hash(col("vec_id"), lit(77)), lit(qstep)) === 0)
+        bal.filter(sampled)
           .selectExpr("vec_id AS query_id", "embedding AS qe", "n2 AS qn2",
             "cell2 AS probe"))
       val balCand = bal.selectExpr("vec_id AS neighbor_id",
         "embedding AS ce", "n2 AS cn2", "cell AS ccell")
-      val balGot = top3(balQ.join(balCand, col("probe") === col("ccell")))
-      val balR1 = (truth & balGot).size.toDouble / truth.size
-      val balGot2 = top3(balQ2.join(balCand, col("probe") === col("ccell"))
-        .dropDuplicates("query_id", "neighbor_id"))
-      val balR2 = (truth & balGot2).size.toDouble / truth.size
+      val balR1 = recall(top3(balQ.join(balCand, col("probe") === col("ccell"))))
+      val balR2 = recallOf(balQ2, balCand)
       // nprobe=3 (q_ann_ivf_trained_probe3): + the home super's
       // second-best child — recall must order probe3 ≥ probe2 ≥ probe1
       val balQ3 = balQ2.unionByName(
-        bal.filter(pmod(hash(col("vec_id"), lit(77)), lit(qstep)) === 0)
+        bal.filter(sampled)
           .selectExpr("vec_id AS query_id", "embedding AS qe", "n2 AS qn2",
             "cell3 AS probe"))
-      val balGot3 = top3(balQ3.join(balCand, col("probe") === col("ccell"))
-        .dropDuplicates("query_id", "neighbor_id"))
-      val balR3 = (truth & balGot3).size.toDouble / truth.size
+      val balR3 = recallOf(balQ3, balCand)
       balQ.unpersist()
 
       // the DENSITY-ADAPTIVE LSH (q_ann_lsh_adaptive) on the same
@@ -206,19 +208,14 @@ object AnnClusteredStress {
       // sensible recall point).
       val refCap = 125
       val ref = ops.SimilarityQueries.lshRefined(spark, dir, refCap)
-      val rCounts = ref.groupBy("bucket", "cell").count()
-        .select("count").collect().map(_.getLong(0)).sorted
-      val (refUsed, refMax, refMed) =
-        (rCounts.length, rCounts.last, rCounts(rCounts.length / 2))
-      val refSq = rCounts.map(x => x.toDouble * x).sum
-      val refQ = ref.filter(pmod(hash(col("vec_id"), lit(77)), lit(qstep)) === 0)
+      val (refUsed, refMax, refMed, refSq) = occ(ref, "bucket", "cell")
+      val refQ = ref.filter(sampled)
         .selectExpr("vec_id AS query_id", "embedding AS qe", "n2 AS qn2",
           "bucket AS pbucket", "cell AS pcell")
       val refCand = ref.selectExpr("vec_id AS neighbor_id",
         "embedding AS ce", "n2 AS cn2", "bucket AS cbucket", "cell AS ccell")
-      val refGot = top3(refQ.join(refCand,
-        col("pbucket") === col("cbucket") && col("pcell") === col("ccell")))
-      val refR1 = (truth & refGot).size.toDouble / truth.size
+      val refR1 = recall(top3(refQ.join(refCand,
+        col("pbucket") === col("cbucket") && col("pcell") === col("ccell"))))
 
       // NEAR-DUP RETENTION — the blocking-key metric for the
       // q_dedup_embedding_lsh family: a pair survives iff it shares the
@@ -231,9 +228,7 @@ object AnnClusteredStress {
       // consistent with the recall rows — a third independent
       // measurement of the same conclusion).
       // Truth from the sampled queries only (bounded: |sample|·N pairs).
-      def ndPairs(joined: DataFrame): Set[(Long, Long)] =
-        NearDupLaw.pairs(joined) // the SHARED law (see NearDupLaw)
-      val qnd = assigned.filter(pmod(hash(col("vec_id"), lit(77)), lit(qstep)) === 0)
+      val qnd = assigned.filter(sampled)
         .selectExpr("vec_id AS query_id", "embedding AS qe", "n2 AS qn2",
           "bucket AS pbucket")
       val candB = assigned.selectExpr("vec_id AS neighbor_id",
@@ -241,12 +236,12 @@ object AnnClusteredStress {
       val ndTruth = ndPairs(
         qnd.drop("pbucket").crossJoin(candB.drop("cbucket")))
       val ndLsh = ndPairs(qnd.join(candB, col("pbucket") === col("cbucket")))
-      val refQnd = ref.filter(pmod(hash(col("vec_id"), lit(77)), lit(qstep)) === 0)
+      val refQnd = ref.filter(sampled)
         .selectExpr("vec_id AS query_id", "embedding AS qe", "n2 AS qn2",
           "bucket AS pbucket", "cell AS pcell")
       val ndRef = ndPairs(refQnd.join(refCand,
         col("pbucket") === col("cbucket") && col("pcell") === col("ccell")))
-      val balQnd = bal.filter(pmod(hash(col("vec_id"), lit(77)), lit(qstep)) === 0)
+      val balQnd = bal.filter(sampled)
         .selectExpr("vec_id AS query_id", "embedding AS qe", "n2 AS qn2",
           "cell AS probe")
       val ndBal = ndPairs(balQnd.join(balCand, col("probe") === col("ccell")))
@@ -260,7 +255,7 @@ object AnnClusteredStress {
       // declared query's real join size: Σ occ(cell) + Σ_{cell2≠cell}
       // occ(cell2) — bounded by 2× the single-probe mass.
       val balQnd2 = balQnd.unionByName(
-        bal.filter(pmod(hash(col("vec_id"), lit(77)), lit(qstep)) === 0)
+        bal.filter(sampled)
           .filter(col("cell2") =!= col("cell"))
           .selectExpr("vec_id AS query_id", "embedding AS qe", "n2 AS qn2",
             "cell2 AS probe"))
@@ -283,7 +278,7 @@ object AnnClusteredStress {
       // THREE-probe (q_dedup_embedding_probe3): + the home super's
       // second-best child (cell3) — the INTRA-super seam
       val balQnd3 = balQnd2.unionByName(
-        bal.filter(pmod(hash(col("vec_id"), lit(77)), lit(qstep)) === 0)
+        bal.filter(sampled)
           .filter(col("cell3") =!= col("cell"))
           .selectExpr("vec_id AS query_id", "embedding AS qe", "n2 AS qn2",
             "cell3 AS probe"))
@@ -312,7 +307,7 @@ object AnnClusteredStress {
       val adpMass = adp.selectExpr("explode(probes) AS cell")
         .join(broadcast(cnt), "cell")
         .agg(coalesce(sum("bn"), lit(0L))).head.getLong(0).toDouble
-      val adpQ = adp.filter(pmod(hash(col("vec_id"), lit(77)), lit(qstep)) === 0)
+      val adpQ = adp.filter(sampled)
       val adpGot1 = adpQ.selectExpr("vec_id AS query_id", "embedding AS qe",
           "n2 AS qn2", "explode(probes) AS probe")
         .join(adp.selectExpr("vec_id AS neighbor_id", "embedding AS ce",
@@ -333,10 +328,7 @@ object AnnClusteredStress {
       // ≥ trained_recall3_probe1 by construction; the interesting gap
       // is vs probe3 at the high factors where boundary queries spend
       // the cap)
-      val adpRecall = {
-        val got = top3(adpGot1.dropDuplicates("query_id", "neighbor_id"))
-        (truth & got).size.toDouble / truth.size
-      }
+      val adpRecall = recall(top3(adpGot1.dropDuplicates("query_id", "neighbor_id")))
 
       // adaptive SIZE SWITCH: force the shared budget below this
       // corpus's c so trainedAdaptiveCells delegates to its DIST
@@ -385,10 +377,8 @@ object AnnClusteredStress {
         .filter("lb1 <> lb2 OR lc1 <> lc2").count() +
         math.abs(lshSwitched.count() - n)
       spark.conf.unset(ops.SimilarityQueries.MaxDriverSeedsKey)
-      def removalRecall(got: Set[(Long, Long)]): Double =
-        NearDupLaw.removalRecall(ndTruth, got)
-      val remAdp = removalRecall(ndAdp)
-      val remMp3 = removalRecall(ndBalMp3)
+      val remAdp = removalRecall(ndTruth, ndAdp)
+      val remMp3 = removalRecall(ndTruth, ndBalMp3)
 
       // corpus-adaptive PQ codes (r10, q_ann_ivfpq_trained): the code
       // count must TRACK the corpus (⌈n/125⌉ clamped to [16,256]) and
@@ -591,40 +581,29 @@ object AnnClusteredStress {
       val l3DriverSeeds =
         ops.SimilarityQueries.TrainedBuildStats.lastDriverSeeds
       val l3RowsLost = math.abs(l3.count() - n)
-      val l3Counts = l3.groupBy("cell").count()
-        .select("count").collect().map(_.getLong(0)).sorted
-      val (l3Used, l3Max, l3Med) =
-        (l3Counts.length, l3Counts.last, l3Counts(l3Counts.length / 2))
-      val l3Sq = l3Counts.map(x => x.toDouble * x).sum
-      val l3Q = l3.filter(pmod(hash(col("vec_id"), lit(77)), lit(qstep)) === 0)
+      val (l3Used, l3Max, l3Med, l3Sq) = occ(l3, "cell")
+      val l3Q = l3.filter(sampled)
         .selectExpr("vec_id AS query_id", "embedding AS qe", "n2 AS qn2",
           "cell AS probe")
       val l3Cand = l3.selectExpr("vec_id AS neighbor_id",
         "embedding AS ce", "n2 AS cn2", "cell AS ccell")
-      val l3Got = top3(l3Q.join(l3Cand, col("probe") === col("ccell")))
-      val l3R1 = (truth & l3Got).size.toDouble / truth.size
+      val l3R1 = recall(top3(l3Q.join(l3Cand, col("probe") === col("ccell"))))
       // the nprobe=2 knob (q_ann_ivf_trained_l3_probe2): the beam's
       // runner-up cell, probe-side only — the recall compensation the
       // share gate rides on
       val l3Q2 = l3Q.unionByName(
-        l3.filter(pmod(hash(col("vec_id"), lit(77)), lit(qstep)) === 0)
+        l3.filter(sampled)
           .selectExpr("vec_id AS query_id", "embedding AS qe",
             "n2 AS qn2", "cell2 AS probe"))
-      val l3Got2 = top3(l3Q2.join(l3Cand, col("probe") === col("ccell"))
-        .dropDuplicates("query_id", "neighbor_id"))
-      val l3R2 = (truth & l3Got2).size.toDouble / truth.size
+      val l3R2 = recallOf(l3Q2, l3Cand)
       // the ADAPTIVE-nprobe knob on the L3 book (r12,
       // q_ann_ivf_trained_l3_adaptive): the margin law over the beam's
       // already-scanned leaves — measured beside the fixed probe1/2
       // rows on the same truth, gated ≥ probe1 (home-cell superset)
       val l3AdpRecall = {
-        val q = l3.filter(pmod(hash(col("vec_id"), lit(77)),
-            lit(qstep)) === 0)
-          .selectExpr("vec_id AS query_id", "embedding AS qe",
+        val q = l3.filter(sampled).selectExpr("vec_id AS query_id", "embedding AS qe",
             "n2 AS qn2", "explode(probes) AS probe")
-        val got = top3(q.join(l3Cand, col("probe") === col("ccell"))
-          .dropDuplicates("query_id", "neighbor_id"))
-        (truth & got).size.toDouble / truth.size
+        recallOf(q, l3Cand)
       }
       val (l3sc, l3ss, l3gs) = ops.SimilarityQueries.trainedStridesL3(n)
       val l3Supers =
@@ -650,13 +629,12 @@ object AnnClusteredStress {
       // inner joins and hold recall near the full L3 book — training
       // on 9/10 of the corpus should cost little
       def l3Recall(book: DataFrame): Double = {
-        val bq = book.filter(pmod(hash(col("vec_id"), lit(77)), lit(qstep)) === 0)
+        val bq = book.filter(sampled)
           .selectExpr("vec_id AS query_id", "embedding AS qe",
             "n2 AS qn2", "cell AS probe")
         val bc = book.selectExpr("vec_id AS neighbor_id",
           "embedding AS ce", "n2 AS cn2", "cell AS ccell")
-        val got = top3(bq.join(bc, col("probe") === col("ccell")))
-        (truth & got).size.toDouble / truth.size
+        recall(top3(bq.join(bc, col("probe") === col("ccell"))))
       }
       val l3i = ops.SimilarityQueries.trainedCellsL3Inc(spark, dir,
         "vec_id % 10 <> 0")
@@ -727,13 +705,9 @@ object AnnClusteredStress {
       val semT0 = System.nanoTime()
       val sem = ops.ClusteringQueries.semClusters(spark, dir)
       val semAll = assigned.join(sem, "vec_id").persist()
-      val semCounts = semAll.groupBy("cluster").count()
-        .select("count").collect().map(_.getLong(0)).sorted
+      val (semUsed, semMax, semMed, semSq) = occ(semAll, "cluster")
       val semBuildS = (System.nanoTime() - semT0) / 1e9
-      val (semUsed, semMax, semMed) =
-        (semCounts.length, semCounts.last, semCounts(semCounts.length / 2))
-      val semSq = semCounts.map(x => x.toDouble * x).sum
-      val semQnd = semAll.filter(pmod(hash(col("vec_id"), lit(77)), lit(qstep)) === 0)
+      val semQnd = semAll.filter(sampled)
         .selectExpr("vec_id AS query_id", "embedding AS qe", "n2 AS qn2",
           "cluster AS pcl")
       val semCand = semAll.selectExpr("vec_id AS neighbor_id",
@@ -874,21 +848,25 @@ object AnnClusteredStress {
     }
     // the scale verdicts: candidate mass must grow ~linearly (ratio ≲
     // factor × 1.5, same slack as ScaleStress), recall must not collapse
-    def massOf(key: String): Map[String, Double] = rows.map(r => {
-      val m = ("\"" + key + "\":([0-9.eE+]+)").r
-        .findFirstMatchIn(r.json).get.group(1).toDouble
-      r.tag -> m
-    }).toMap
-    val mass = massOf("cell_pair_mass")
-    val balMass = massOf("trained_pair_mass")
-    val refMass = massOf("adaptive_lsh_pair_mass")
-    val semMass = massOf("sem_pair_mass")
-    val mpMassR = massOf("multi_probe3_pair_mass")
-    val massRatio = mass(s"${factor}x") / mass("1x")
-    val balRatio = balMass(s"${factor}x") / balMass("1x")
-    val refRatio = refMass(s"${factor}x") / refMass("1x")
-    val semRatio = semMass(s"${factor}x") / semMass("1x")
-    val mpRatio = mpMassR(s"${factor}x") / mpMassR("1x")
+    def massOf(key: String): Map[String, Double] = rows.map(r => r.tag ->
+      ("\"" + key + "\":([0-9.eE+]+)").r.findFirstMatchIn(r.json).get.group(1)
+        .toDouble).toMap
+    def ratioOf(key: String): Double = {
+      val m = massOf(key)
+      m(s"${factor}x") / m("1x")
+    }
+    val massRatio = ratioOf("cell_pair_mass")
+    val balRatio = ratioOf("trained_pair_mass")
+    val refRatio = ratioOf("adaptive_lsh_pair_mass")
+    val semRatio = ratioOf("sem_pair_mass")
+    val mpRatio = ratioOf("multi_probe3_pair_mass")
+    // the gate lists: every scale tag (plus `suffix`) whose `key` fails
+    def failing(key: String, suffix: String = "")(
+        bad: (String, Double) => Boolean): Seq[String] =
+      massOf(key).collect { case (tag, v) if bad(tag, v) => tag + suffix }
+        .toSeq.sorted
+    def nonzero(keys: String*): Seq[String] =
+      keys.flatMap(failing(_)((_, d) => d != 0.0))
     // GATES (r09 — retention and dist-equality used to be
     // informational): the RECOMMENDED near-dup blocker (multi-probe
     // trained cells) must retain at least RetentionFloor of the true
@@ -896,17 +874,15 @@ object AnnClusteredStress {
     // codebook build must assign identically at every scale. A breach
     // populates the list and the run's consumer sees it without
     // reading per-scale rows.
-    val retMpByTag = massOf("neardup_retention_multi_probe3")
-    val retBreach = retMpByTag.collect {
-      case (tag, r) if r < RetentionFloor => tag }.toSeq.sorted
-    val adpRetBreach = massOf("neardup_retention_adaptive_probe").collect {
-      case (tag, r) if r < AdaptiveRetentionFloor => tag }.toSeq.sorted
-    val remBreach = massOf("removal_recall_adaptive").collect {
-      case (tag, r) if r < RemovalRecallFloor => tag }.toSeq.sorted
+    val retBreach = failing("neardup_retention_multi_probe3")(
+      (_, r) => r < RetentionFloor)
+    val adpRetBreach = failing("neardup_retention_adaptive_probe")(
+      (_, r) => r < AdaptiveRetentionFloor)
+    val remBreach = failing("removal_recall_adaptive")(
+      (_, r) => r < RemovalRecallFloor)
     // adaptive PQ must not quantize WORSE than the fixed 16-code book
     val errF = massOf("pq_adc_relerr_fixed")
-    val pqBreach = massOf("pq_adc_relerr_adaptive").collect {
-      case (tag, e) if e > errF(tag) => tag }.toSeq.sorted
+    val pqBreach = failing("pq_adc_relerr_adaptive")((t, e) => e > errF(t))
     // residual-256 vs raw-256 — the HONEST r11 measurement: on this
     // corpus residual encoding does NOT cut ADC error (raw 0.189 vs
     // res 0.210 at 1×, stable across scales and centroid choices —
@@ -920,33 +896,28 @@ object AnnClusteredStress {
     // path (the seed-centroid variance mistake class) without
     // pretending the fixture shows the production win.
     val err256RawByTag = massOf("pq256_adc_relerr_raw")
-    val pqRes256Breach = massOf("pq256_adc_relerr_res").collect {
-      case (tag, e) if e > 1.25 * err256RawByTag(tag) => tag }.toSeq.sorted
+    val pqRes256Breach = failing("pq256_adc_relerr_res")(
+      (t, e) => e > 1.25 * err256RawByTag(t))
     // exact re-rank (r12, q_ann_ivfpq_rerank): the re-ranked top-5
     // may never recall LESS than the raw ADC top-5 against the exact
     // same-cell truth — both ratios share the identical deterministic
     // truth set, so exact ≥ holds; the epsilon covers float printing
     val adcR5ByTag = massOf("pq256_top5_recall_adc")
     val sq8R5ByTag = massOf("sq8_top5_recall_est")
-    val pqRerankBreach = (massOf("pq256_top5_recall_rerank").collect {
-      case (tag, r) if r < adcR5ByTag(tag) - 0.0005 => tag }.toSeq ++
-      massOf("sq8_top5_recall_rerank").collect {
-        case (tag, r) if r < sq8R5ByTag(tag) - 0.0005 => s"$tag(sq8)" }
-        .toSeq).sorted
-    val distBreach = massOf("trained_dist_cell_diff").collect {
-      case (tag, d) if d != 0.0 => tag }.toSeq.sorted
+    val pqRerankBreach = (failing("pq256_top5_recall_rerank")(
+      (t, r) => r < adcR5ByTag(t) - 0.0005) ++
+      failing("sq8_top5_recall_rerank", "(sq8)")(
+        (t, r) => r < sq8R5ByTag(t) - 0.0005)).sorted
+    val distBreach = nonzero("trained_dist_cell_diff")
     // the L3 gates: the three-level build must keep every row (an
     // inner-join drop = broken subset invariant), and its coarser
     // routing must hold at least L3RecallShare of the two-level
     // probe1 recall on the same corpus at every scale
-    val l3Lost = (massOf("l3_rows_lost").collect {
-      case (tag, d) if d != 0.0 => tag }.toSeq ++
-      massOf("l3_inc_rows_lost").collect {
-        case (tag, d) if d != 0.0 => s"$tag(inc)" }.toSeq).sorted
+    val l3Lost = (nonzero("l3_rows_lost") ++
+      failing("l3_inc_rows_lost", "(inc)")((_, d) => d != 0.0)).sorted
     val balR1ByTag = massOf("trained_recall3_probe1")
-    val l3RecallBreach = massOf("l3_recall3_probe2").collect {
-      case (tag, r) if r < L3RecallShare * balR1ByTag(tag) => tag }
-      .toSeq.sorted
+    val l3RecallBreach = failing("l3_recall3_probe2")(
+      (t, r) => r < L3RecallShare * balR1ByTag(t))
     // the served L3 book gate (re-based r11, see the control's comment
     // above): the EXCLUSION COST — inc (trained on 9/10 of rows) vs
     // the selection-law-matched control (same scheme, all rows) — must
@@ -955,9 +926,8 @@ object AnnClusteredStress {
     // as a RECORD (l3_inc vs l3 rows) with the corpus-symmetry
     // analysis, not a gate.
     val l3IncTByTag = massOf("l3_incsel_recall3_probe1")
-    val l3IncBreach = massOf("l3_inc_recall3_probe1").collect {
-      case (tag, r) if r < L3IncShare * l3IncTByTag(tag) => tag }
-      .toSeq.sorted
+    val l3IncBreach = failing("l3_inc_recall3_probe1")(
+      (t, r) => r < L3IncShare * l3IncTByTag(t))
     // the adaptive SEARCH gate (r12): the margin-law probe set always
     // contains the home cell, so its top-3 recall can never measure
     // below probe1's on the same truth — a breach is a broken probe
@@ -965,25 +935,15 @@ object AnnClusteredStress {
     // recalls are ratios of the same ≤ ~300-pair truth set, so exact
     // ≥ holds; the slack covers only float printing)
     val l3R1ByTag = massOf("l3_recall3_probe1")
-    val adpSearchBreach = (massOf("trained_recall3_adaptive").collect {
-      case (tag, r) if r < balR1ByTag(tag) - 0.0005 => tag }.toSeq ++
-      massOf("l3_recall3_adaptive").collect {
-        case (tag, r) if r < l3R1ByTag(tag) - 0.0005 => s"$tag(l3)" }
-        .toSeq).sorted
+    val adpSearchBreach = (failing("trained_recall3_adaptive")(
+      (t, r) => r < balR1ByTag(t) - 0.0005) ++
+      failing("l3_recall3_adaptive", "(l3)")(
+        (t, r) => r < l3R1ByTag(t) - 0.0005)).sorted
     // the r10 switch gate: at every scale the forced-budget build must
     // have actually taken the dist route AND agreed on every probe col
-    val switchBreach = (massOf("switch_probe_diff").collect {
-      case (tag, d) if d != 0.0 => tag }.toSeq ++
-      massOf("sem_switch_diff").collect {
-        case (tag, d) if d != 0.0 => tag }.toSeq ++
-      massOf("adp_switch_probe_diff").collect {
-        case (tag, d) if d != 0.0 => tag }.toSeq ++
-      massOf("lsh_switch_cell_diff").collect {
-        case (tag, d) if d != 0.0 => tag }.toSeq ++
-      massOf("ann_auto_cell_diff").collect {
-        case (tag, d) if d != 0.0 => tag }.toSeq ++
-      massOf("ann_auto_ingest_diff").collect {
-        case (tag, d) if d != 0.0 => tag }.toSeq ++
+    val switchBreach = (nonzero("switch_probe_diff", "sem_switch_diff",
+      "adp_switch_probe_diff", "lsh_switch_cell_diff", "ann_auto_cell_diff",
+      "ann_auto_ingest_diff") ++
       rows.collect {
         case r if !r.json.contains(""""switch_route":"dist"""") ||
           !r.json.contains(""""sem_switch_route":"dist"""") ||
@@ -1024,42 +984,29 @@ object AnnClusteredStress {
         f""""multi_probe_retention_floor":$RetentionFloor%.2f,""" +
         f""""adaptive_retention_floor":$AdaptiveRetentionFloor%.2f,""" +
         f""""removal_recall_floor":$RemovalRecallFloor%.2f,""" +
-        s""""adaptive_retention_below_floor":${adpRetBreach.map("\"" + _ + "\"")
-          .mkString("[", ",", "]")},""" +
-        s""""removal_recall_below_floor":${remBreach.map("\"" + _ + "\"")
-          .mkString("[", ",", "]")},""" +
-        s""""pq_adaptive_worse":${pqBreach.map("\"" + _ + "\"")
-          .mkString("[", ",", "]")},""" +
-        s""""pq_res256_worse":${pqRes256Breach.map("\"" + _ + "\"")
-          .mkString("[", ",", "]")},""" +
-        s""""pq_rerank_below_adc":${pqRerankBreach.map("\"" + _ + "\"")
-          .mkString("[", ",", "]")},""" +
+        s""""adaptive_retention_below_floor":${Bench.jsonStrs(adpRetBreach)},""" +
+        s""""removal_recall_below_floor":${Bench.jsonStrs(remBreach)},""" +
+        s""""pq_adaptive_worse":${Bench.jsonStrs(pqBreach)},""" +
+        s""""pq_res256_worse":${Bench.jsonStrs(pqRes256Breach)},""" +
+        s""""pq_rerank_below_adc":${Bench.jsonStrs(pqRerankBreach)},""" +
         """"pq_res256_note":"measured negative: with occupancy-125 """ +
         """trained cells the residual blob is near-isotropic and """ +
         """raw-256 quantizes BETTER (0.189 vs 0.210 at 1x); the gate """ +
         """is a 1.25x regression bound, not a residual-wins claim — """ +
         """residual pays off on COARSE cells (the FAISS regime), """ +
         """which constant-occupancy cell laws deliberately avoid",""" +
-        s""""retention_below_floor":${retBreach.map("\"" + _ + "\"")
-          .mkString("[", ",", "]")},""" +
-        s""""dist_build_diff_nonzero":${distBreach.map("\"" + _ + "\"")
-          .mkString("[", ",", "]")},""" +
+        s""""retention_below_floor":${Bench.jsonStrs(retBreach)},""" +
+        s""""dist_build_diff_nonzero":${Bench.jsonStrs(distBreach)},""" +
         f""""l3_recall_share_floor":$L3RecallShare%.2f,""" +
-        s""""l3_rows_lost_nonzero":${l3Lost.map("\"" + _ + "\"")
-          .mkString("[", ",", "]")},""" +
-        s""""l3_recall_below_share":${l3RecallBreach.map("\"" + _ + "\"")
-          .mkString("[", ",", "]")},""" +
-        s""""l3_inc_recall_below_share":${l3IncBreach.map("\"" + _ + "\"")
-          .mkString("[", ",", "]")},""" +
-        s""""adaptive_search_below_probe1":${adpSearchBreach
-          .map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-        s""""switch_gate_breach":${switchBreach.map("\"" + _ + "\"")
-          .mkString("[", ",", "]")},""" +
+        s""""l3_rows_lost_nonzero":${Bench.jsonStrs(l3Lost)},""" +
+        s""""l3_recall_below_share":${Bench.jsonStrs(l3RecallBreach)},""" +
+        s""""l3_inc_recall_below_share":${Bench.jsonStrs(l3IncBreach)},""" +
+        s""""adaptive_search_below_probe1":${Bench.jsonStrs(adpSearchBreach)},""" +
+        s""""switch_gate_breach":${Bench.jsonStrs(switchBreach)},""" +
         f""""linear_bound":${factor * 1.5}%.1f}"""
     java.nio.file.Files.writeString(java.nio.file.Path.of(outJson), out)
     println(s"[ann-clustered] wrote $outJson (pair-mass ratio hash=" +
       f"$massRatio%.2f trained=$balRatio%.2f adaptiveLsh=$refRatio%.2f " +
       f"vs linear bound ${factor * 1.5}%.1f)")
-    spark.stop()
   }
 }

@@ -1,22 +1,42 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.json4s._
+import org.json4s.jackson.JsonMethods
 object Bench {
-  /** First-recorded per-query seconds from BASELINE.md — the 2×
-    * acceptance anchors for the outlier re-measure protocol. */
-  private def baselines(): Map[String, Double] = {
-    val f = Seq("BASELINE.md", "/root/repo/BASELINE.md")
-      .map(new java.io.File(_)).find(_.exists())
-    f.map { file =>
-      val src = scala.io.Source.fromFile(file, "UTF-8")
-      try src.getLines().filter(_.startsWith("| q_")).flatMap { l =>
+  /** First-recorded per-query seconds from a BASELINE table (`| q | s |`
+    * rows) in the working directory — the 2× acceptance anchors for the
+    * outlier re-measure protocol. */
+  private[graft] def anchors(file: String): Map[String, Double] =
+    if (!new java.io.File(file).exists()) Map.empty
+    else scala.util.Using.resource(scala.io.Source.fromFile(file, "UTF-8"))(
+      _.getLines().filter(_.startsWith("| q_")).flatMap { l =>
         val c = l.split("\\|").map(_.trim)
-        if (c.length >= 3)
-          scala.util.Try(c(1) -> c(2).toDouble).toOption
+        if (c.length >= 3) scala.util.Try(c(1) -> c(2).toDouble).toOption
         else None
-      }.toMap
-      finally src.close()
-    }.getOrElse(Map.empty)
+      }.toMap)
+
+  /** Untimed warm-up reads of table footers, so session/JIT start-up is
+    * not billed to whichever query runs first. */
+  private[graft] def warm(spark: SparkSession, dir: String,
+      tables: Seq[String]): Unit =
+    tables.foreach(t => scala.util.Try(spark.read.parquet(s"$dir/$t.parquet").count()))
+
+  /** A committed JSON artifact in the working directory, if readable. */
+  private[graft] def readJson(file: String): Option[JValue] =
+    try Some(JsonMethods.parse(java.nio.file.Files.readString(
+      java.nio.file.Path.of(file))))
+    catch { case _: Throwable => None }
+
+  private[graft] def num(v: JValue): Option[Double] = v match {
+    case JDouble(x) => Some(x)
+    case JInt(x) => Some(x.toDouble)
+    case JLong(x) => Some(x.toDouble)
+    case _ => None
   }
+
+  /** `["a","b"]` — a JSON array of plain names. */
+  private[graft] def jsonStrs(xs: Iterable[String]): String =
+    xs.map("\"" + _ + "\"").mkString("[", ",", "]")
 
   /** Fixed-work single-thread spin — the ambient-load microprobe
     * (r11, r10 verdict item 6): 3×10⁸ LCG steps take a fixed number
@@ -51,16 +71,124 @@ object Bench {
       s"[${parts(0)},${parts(1)},${parts(2)}]"
     } catch { case _: Throwable => "[-1,-1,-1]" }
 
+  /** One execution of a declared query to `count()`, its scratch frames
+    * released inside the timing: seconds, or the -1.0 sentinel when it
+    * throws (never a timing, so a broken query cannot masquerade as
+    * fast). `analyzer` attributes its stages to the query's name. */
+  private[graft] def timeOnce(spark: SparkSession, dir: String, name: String,
+      analyzer: Option[metrics.StageAnalyzer]): Double = {
+    analyzer.foreach(_.setLabel(name))
+    val t0 = System.nanoTime()
+    val ok = try { SparkEntry.queries(name)(spark, dir).count(); true }
+      catch { case _: Throwable => false }
+      finally ScratchCache.release()
+    if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+  }
+
+  /** A timed query set: `suite` holds the 3-pass medians, `remeasured`
+    * (query, suite, isolated) for every 2× anchor breach, `reported`
+    * the suite medians after the substitution rule. */
+  final case class Timing(suite: Seq[(String, Double)],
+      remeasured: Seq[(String, Double, Double)],
+      reported: Seq[(String, Double)], errors: Set[String]) {
+    /** Reported values still over 2× their anchor. */
+    def breaches(anchors: Map[String, Double]): Seq[String] =
+      reported.collect { case (q, t) if over2x(anchors, q, t) => q }
+  }
+
+  private def over2x(anchors: Map[String, Double], q: String, t: Double) =
+    t > 0 && anchors.get(q).exists(b => b > 0 && t > 2 * b)
+
+  /** THE timing core, shared by the sf0.1 suite and the 10× gate:
+    * median of 3 passes over `names` in order (cache cleared before each
+    * pass, `analyzer` reset), -1.0 and an `errors` entry for a query
+    * that throws. `snapshot` runs after the suite, before any re-measure.
+    *
+    * OUTLIER RE-MEASURE (the r03 q_dedup_prefix 8.29s-vs-1.29s
+    * incident): a suite median over 2× its `anchors` row is re-measured
+    * in ISOLATION (fresh 3-run median) and both numbers are recorded.
+    * GATE ERGONOMICS (r05, tightened r07): the isolated median becomes
+    * the REPORTED value only when the suite breach is in the ambient
+    * noise band (< 2.5×) AND the isolated median itself clears 2× — a
+    * genuinely regressed query can never report its best-case time. */
+  def timeQueries[A](spark: SparkSession, dir: String, names: Seq[String],
+      anchors: Map[String, Double],
+      analyzer: Option[metrics.StageAnalyzer])(snapshot: => A): (Timing, A) = {
+    val errors = scala.collection.mutable.SortedSet.empty[String]
+    def timed(name: String): Double = {
+      val t = timeOnce(spark, dir, name, analyzer)
+      if (t < 0) errors += name
+      t
+    }
+    def median(ts: Seq[Double]): Double =
+      if (ts.exists(_ < 0)) -1.0 else ts.sorted.apply(1)
+    val passes = (1 to 3).map { _ =>
+      spark.catalog.clearCache()
+      analyzer.foreach(_.reset()) // keep only the last pass's attribution
+      names.map(n => n -> timed(n)).toMap
+    }
+    val suite = names.map(n => n -> median(passes.map(_(n))))
+    val snap = snapshot
+    val remeasured = suite.filter { case (q, t) => over2x(anchors, q, t) }.sortBy(_._1)
+      .map { case (q, suiteT) => (q, suiteT,
+        median((1 to 3).map { _ => spark.catalog.clearCache(); timed(q) })) }
+    val sub = remeasured.collect {
+      case (q, suiteT, isoT) if isoT > 0 &&
+          anchors.get(q).exists(b => suiteT < 2.5 * b && isoT <= 2.0 * b) =>
+        q -> isoT
+    }.toMap
+    val reported = suite.map { case (q, t) => q -> sub.getOrElse(q, t) }
+    (Timing(suite, remeasured, reported, errors.toSet), snap)
+  }
+
+  /** Total-length cap of the contract line: the driver keeps the LAST
+    * 2000 chars of stdout, and the ~80-char sbt epilogue follows it. */
+  private[graft] val LineCap = 1850
+
+  /** THE DRIVER CONTRACT LINE: one JSON line of at most LineCap chars for
+    * any query set (a full map is ~6 KB, which left every r01–r08 round
+    * artifact at parsed:null); the complete map is BENCH_DETAIL.json.
+    * Fill order, each entry only while the line fits: the error names,
+    * then the STICKY set (the queries the previous round's line printed,
+    * so a query that got faster never reads as dropped_from_bench —
+    * r12 verdict item 7), then the rest slowest-first. */
+  private[graft] def contractLine(total: Double, totalNorm: Double,
+      reported: Seq[(String, Double)], errors: Seq[String], remeasuredN: Int,
+      sticky: Set[String], sf: String): String = {
+    val slowest = reported.filter(_._2 >= 0).sortBy(-_._2)
+    def entry(q: String, t: Double) = f""""$q":$t%.2f"""
+    def line(qs: Seq[(String, Double)], errs: Seq[String]) =
+      s"""{"metric":"total","value":$total,""" +
+        f""""value_load_normalized":$totalNorm%.1f,"unit":"sec",""" +
+        s""""queries":${qs.map { case (q, t) => entry(q, t) }
+          .mkString("{", ",", "}")},""" +
+        s""""queries_omitted":${reported.size - qs.size},""" +
+        s""""queries_total":${reported.size},"errors":${jsonStrs(errs)},""" +
+        s""""errors_omitted":${errors.size - errs.size},""" +
+        s""""remeasured_n":$remeasuredN,""" +
+        s""""detail":"BENCH_DETAIL.json","sf":"$sf"}"""
+    // the empty line carries the widest omitted counts, so each entry's
+    // length + separator bounds what it adds
+    var used = line(Nil, Nil).length
+    def fits(len: Int): Boolean =
+      if (used + len + 1 > LineCap) false else { used += len + 1; true }
+    val errs = errors.filter(e => fits(e.length + 2))
+    val (stick, rest) = slowest.partition(e => sticky.contains(e._1))
+    val shown = (stick ++ rest).filter { case (q, t) => fits(entry(q, t).length) }
+      .map(_._1).toSet
+    line(slowest.filter(e => shown.contains(e._1)), errs)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.cpus
     val loadStart = loadAvg()
     val spinStart = spinProbe()
     // The session-conf contract lives in GraftSession (r13): one
-    // builder shared by Bench, Verify, ProfileQuery and ExplainDump,
-    // so benchmarked, verified and plan-dumped configurations cannot
-    // drift. Per-conf rationale (constraint propagation, checkpoint
-    // checksums, tmpfs scratch, codegen cache) is documented there.
+    // builder shared by every harness main, so benchmarked, verified
+    // and plan-dumped configurations cannot drift. Per-conf rationale
+    // (constraint propagation, checkpoint checksums, tmpfs scratch,
+    // codegen cache) is documented there.
     // NOT set: spark.sql.optimizer.canChangeCachedPlanOutputPartitioning.
     // Measured both ways (r12): letting AQE re-coalesce CACHED plans
     // sizes partitions by bytes, which serializes the CPU-heavy,
@@ -76,135 +204,56 @@ object Bench {
     // untimed warmup: touch every table's footer + one shuffle + the
     // custom expressions, so session/JIT/codegen startup (~5s) is not
     // attributed to whichever query happens to run first
-    try {
-      Seq("region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings").foreach { t =>
-        try spark.read.parquet(s"$sfDir/$t.parquet").count()
-        catch { case _: Throwable => () }
-      }
-      SparkEntry.queries.get("q_agg_sum_count").foreach(_(spark, sfDir).count())
-    } catch { case _: Throwable => () }
-    // median of 3 passes, clearing the DataFrame cache between passes so
-    // per-query persist() calls don't bleed across measurements. A query
-    // that throws is recorded as the -1.0 sentinel (never a timing) and
-    // listed under "errors", so a broken query cannot masquerade as fast.
-    val errors = scala.collection.mutable.SortedSet.empty[String]
+    warm(spark, sfDir, Seq("region", "nation", "customer", "supplier", "part",
+      "orders", "lineitem", "events", "documents", "embeddings"))
+    scala.util.Try(SparkEntry.queries.get("q_agg_sum_count")
+      .foreach(_(spark, sfDir).count()))
     // optional arg: comma-separated query names, for single-query iteration
     // (the driver passes no args → full suite, unchanged)
-    val selected =
-      if (args.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.view.filterKeys(args(0).split(',').toSet).toMap
-    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      analyzer.setLabel(name)
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
-        catch { case _: Throwable => errors += name; false }
-        finally ScratchCache.release() // per-query scratch, timed with it
-      if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-    }
-    val passes = (1 to 3).map { _ =>
-      spark.catalog.clearCache()
-      analyzer.reset() // keep only the last pass's stage attribution
-      selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-        name -> timeOne(name, fn)
-      }.toMap
-    }
-    val results = selected.keys.map { name =>
-      val ts = passes.map(_(name))
-      name -> (if (ts.exists(_ < 0)) -1.0 else ts.sorted.apply(1))
-    }.toMap
-    // let the listener bus drain before reading the stage report
-    Thread.sleep(1500)
-    val stagesJson = analyzer.reportJson()
-    // critical-path chain per query (CriticalPathAnalyzer parity) —
-    // snapshot with the stage report, before the re-measure phase
-    // appends extra same-label runs
-    val criticalJson = analyzer.criticalJson()
-    val skewMap = analyzer.skewFlags()
+    val names = SparkEntry.queries.keys.toSeq
+      .filter(n => args.isEmpty || args(0).split(',').contains(n)).sorted
+    // Stage attribution is snapshotted after the suite, before the
+    // re-measures: re-measured queries execute 3 more times under the
+    // same label, and a later snapshot would attribute those extra
+    // runs' bytes to the query — a 4× phantom "regression" in the trend
+    // gate (observed on q_dedup_ngram r05).
+    val (timing, (stagesJson, criticalJson, skewMap, newSh)) =
+      timeQueries(spark, sfDir, names, anchors("BASELINE.md"), Some(analyzer)) {
+        // let the listener bus drain before reading the stage report
+        Thread.sleep(1500)
+        // critical-path chain per query (CriticalPathAnalyzer parity)
+        (analyzer.reportJson(), analyzer.criticalJson(), analyzer.skewFlags(),
+          analyzer.report().view
+            .mapValues(_.map(r => r.shuffleReadBytes + r.shuffleWriteBytes).sum)
+            .toMap)
+      }
     val skewJson = skewMap.toSeq.sortBy(_._1)
       .map { case (q, r) => f""""$q":$r%.1f""" }.mkString("{", ",", "}")
-    // Snapshot per-query shuffle bytes HERE, before the outlier
-    // re-measure phase below: re-measured queries execute 3 more times
-    // under the same label, and a post-re-measure snapshot would
-    // attribute those extra runs' bytes to the query — a 4× phantom
-    // "regression" in the trend gate (observed on q_dedup_ngram r05).
-    val newSh: Map[String, Long] = analyzer.report().view
-      .mapValues(_.map(r => r.shuffleReadBytes + r.shuffleWriteBytes).sum)
-      .toMap
-    // OUTLIER RE-MEASURE PROTOCOL: in-suite medians carry interference
-    // (GC/load drain from adjacent heavy queries — the q_dedup_prefix
-    // 8.29s-vs-1.29s incident in r03). Any query whose suite median
-    // exceeds 2× its first-recorded BASELINE.md row is re-measured in
-    // ISOLATION after the suite (fresh 3-run median, cache cleared) and
-    // both numbers are recorded — the artifact then shows whether the
-    // breach is the plan (isolated also slow) or the neighborhood.
-    val base = baselines()
-    val remeasured: Seq[(String, Double, Double)] = results.toSeq
-      .filter { case (q, t) =>
-        t > 0 && base.get(q).exists(b => b > 0 && t > 2 * b) }
-      .sortBy(_._1)
-      .map { case (q, suiteT) =>
-        val ts = (1 to 3).map { _ =>
-          spark.catalog.clearCache()
-          timeOne(q, selected(q))
-        }
-        (q, suiteT, if (ts.exists(_ < 0)) -1.0 else ts.sorted.apply(1))
-      }
     // SKEW AUTO-ISOLATION (r10, r09 verdict item 6): the r08 false
     // 38.2× flag came from the skew map aggregating cache-cold
     // first-pass stages; the fix that closed it was a MANUAL isolated
-    // ProfileQuery run. That logic now runs in-process: any suite skew
+    // per-stage profile. That logic now runs in-process: any suite skew
     // flag ≥ 20× is re-measured ISOLATED (fresh run, analyzer reset)
     // and the isolated per-stage profile rides BENCH_DETAIL.json — a
     // committed skew flag is therefore either reproduced-with-stage-
     // named or auto-cleared, never a mystery for the next round.
-    // Placed after every suite-attribution snapshot above (the resets
-    // here would otherwise wipe them).
-    val skewIsolated: Seq[(String, Double, Double, String)] =
-      skewMap.toSeq // the SNAPSHOT the committed skew map shows, not
-        // the post-remeasure state (re-measured queries append stages
-        // under the same label and could shift the flags)
-        .filter { case (qn, r) => r >= 20.0 && selected.contains(qn) }
-        .sortBy(_._1)
-        .map { case (qn, suiteFlag) =>
-          spark.catalog.clearCache()
-          analyzer.reset()
-          // a failure in this PROFILING-ONLY extra run must not poison
-          // the headline (timeOne adds to `errors`, which flips total
-          // to -1.0): the three timed suite passes already succeeded,
-          // so a dead profile rerun only blanks this entry
-          val preIso = errors.toSet
-          timeOne(qn, selected(qn))
-          errors.clear(); errors ++= preIso
-          Thread.sleep(1200) // drain the listener bus
-          val isoFlag = analyzer.skewFlags().getOrElse(qn, 0.0)
-          val stages = analyzer.report().getOrElse(qn, Nil)
-            .map(_.json).mkString("[", ",", "]")
-          (qn, suiteFlag, isoFlag, stages)
-        }
-    val skewIsoJson = skewIsolated.map { case (qn, s0, i0, st) =>
-      f""""$qn":{"suite":$s0%.1f,"isolated":$i0%.1f,"stages":$st}"""
-    }.mkString("{", ",", "}")
-    // GATE ERGONOMICS (r05 verdict item, tightened r07): a first breach
-    // UNDER 2.5× is the ambient-noise profile (co-tenant load spikes
-    // documented in BASELINE.md), so the isolated median becomes the
-    // query's REPORTED value — the 2× gate reads the stable signal
-    // directly instead of firing on neighborhood noise every noisy
-    // run. Both numbers stay in the artifact ("remeasured": {suite,
-    // isolated}). Substitution requires the ISOLATED value itself to
-    // clear the 2× gate — a genuinely regressed query (isolated still
-    // over 2×) keeps its suite number in the headline and can never
-    // report its best-case time (r06 advisor item). A breach ≥2.5×
-    // likewise keeps the suite value front and center: that magnitude
-    // is a plan problem until the isolated number proves otherwise to
-    // a human reader.
-    val reported = results ++ remeasured.collect {
-      case (q, suiteT, isoT)
-          if isoT > 0 &&
-            base.get(q).exists(b => suiteT < 2.5 * b && isoT <= 2.0 * b) =>
-        q -> isoT
-    }
-    val remeasureJson = remeasured
+    // A failure in this profiling-only run blanks its entry and never
+    // reaches `errors` (the timed suite passes already succeeded).
+    val skewIsoJson = skewMap.toSeq // the SNAPSHOT the committed map shows
+      .filter { case (qn, r) => r >= 20.0 && names.contains(qn) }
+      .sortBy(_._1)
+      .map { case (qn, s0) =>
+        spark.catalog.clearCache()
+        analyzer.reset()
+        timeOnce(spark, sfDir, qn, Some(analyzer))
+        Thread.sleep(1200) // drain the listener bus
+        val i0 = analyzer.skewFlags().getOrElse(qn, 0.0)
+        val st = analyzer.report().getOrElse(qn, Nil).map(_.json)
+          .mkString("[", ",", "]")
+        f""""$qn":{"suite":$s0%.1f,"isolated":$i0%.1f,"stages":$st}"""
+      }.mkString("{", ",", "}")
+    val reported = timing.reported
+    val remeasureJson = timing.remeasured
       .map { case (q, s0, i0) => s""""$q":{"suite":$s0,"isolated":$i0}""" }
       .mkString("{", ",", "}")
     val qs = reported.map { case (k, v) => s"\"" + k + "\":" + v }
@@ -212,8 +261,8 @@ object Bench {
     // any failed query poisons the headline total: a consumer comparing
     // only "value" must not read a broken (hence shorter) run as faster
     val total =
-      if (errors.nonEmpty) -1.0 else reported.values.filter(_ >= 0).sum
-    val errJson = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
+      if (timing.errors.nonEmpty) -1.0 else reported.map(_._2).filter(_ >= 0).sum
+    val errJson = jsonStrs(timing.errors.toSeq.sorted)
     // AQE-coalesce evidence (full-suite runs only): one shuffle-heavy
     // query swept across shuffle-partition settings — AQE re-coalesces
     // post-shuffle partitions at runtime, so times stay ~flat instead of
@@ -225,23 +274,16 @@ object Bench {
         val entries = Seq("8", "32", "128").map { n =>
           spark.conf.set("spark.sql.shuffle.partitions", n)
           spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          val ok = try { SparkEntry.queries(sweepQ)(spark, sfDir).count(); true }
-            catch { case _: Throwable => false }
-            finally ScratchCache.release()
-          s"\"p$n\":" + (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
+          s"\"p$n\":" + timeOnce(spark, sfDir, sweepQ, None)
         }
         spark.conf.set("spark.sql.shuffle.partitions", cpus)
         entries.mkString(s"""{"query":"$sweepQ",""", ",", "}")
       }
-    // THE DRIVER CONTRACT LINE stays lean: the driver records only a
-    // bounded tail of stdout, so the 100 KB per-stage analyzer payload
-    // would push the per-query timings out of the captured window. The
-    // contract line carries metric/value/queries/errors/remeasured; the
-    // full analyzer detail (per-stage breakdown, skew flags, the
-    // shuffle-partition sweep) goes to BENCH_DETAIL.json next to
-    // BASELINE.md — a committed artifact tools/stage_trend.py diffs
-    // round-over-round.
+    // The contract line stays lean (contractLine); the full analyzer
+    // detail (per-stage breakdown, skew flags, the shuffle-partition
+    // sweep) goes to BENCH_DETAIL.json next to BASELINE.md — a
+    // committed artifact tools/stage_trend.py diffs round-over-round.
+    val prevDetail = readJson("BENCH_DETAIL.json")
     // TREND GATE — tools/stage_trend.py's durable-signal check run
     // in-process: before the previous committed BENCH_DETAIL.json is
     // overwritten, diff per-query total shuffle bytes against it.
@@ -253,33 +295,19 @@ object Bench {
     val trendJson =
       if (args.nonEmpty) "[]"
       else {
-        val prevFile = Seq("BENCH_DETAIL.json", "/root/repo/BENCH_DETAIL.json")
-          .map(new java.io.File(_)).find(_.exists())
-        prevFile.map { f =>
-          try {
-            import org.json4s._
-            import org.json4s.jackson.JsonMethods
-            def num(v: JValue): Long = v match {
-              case JInt(x) => x.toLong
-              case JLong(x) => x
-              case JDouble(x) => x.toLong
-              case _ => 0L
-            }
-            val old = JsonMethods.parse(java.nio.file.Files.readString(f.toPath))
-            val oldSh: Map[String, Long] = old \ "stages" match {
-              case JObject(fields) => fields.collect {
-                case (q, JArray(st)) =>
-                  q -> st.map(s => num(s \ "sh_read") + num(s \ "sh_write")).sum
-              }.toMap
-              case _ => Map.empty
-            }
-            oldSh.toSeq.sorted.collect {
-              case (q, o) if o > (1L << 20) &&
-                  newSh.getOrElse(q, 0L) > o * 3 / 2 =>
-                s"""{"query":"$q","old_sh":$o,"new_sh":${newSh(q)}}"""
-            }.mkString("[", ",", "]")
-          } catch { case _: Throwable => "[]" }
-        }.getOrElse("[]")
+        val oldSh: Map[String, Long] = prevDetail.map(_ \ "stages") match {
+          case Some(JObject(fields)) => fields.collect {
+            case (q, JArray(st)) => q -> st.map(s =>
+              (num(s \ "sh_read").getOrElse(0.0) +
+                num(s \ "sh_write").getOrElse(0.0)).toLong).sum
+          }.toMap
+          case _ => Map.empty
+        }
+        oldSh.toSeq.sorted.collect {
+          case (q, o) if o > (1L << 20) &&
+              newSh.getOrElse(q, 0L) > o * 3 / 2 =>
+            s"""{"query":"$q","old_sh":$o,"new_sh":${newSh(q)}}"""
+        }.mkString("[", ",", "]")
       }
     // ambient-load record (r11): end-of-suite loadavg + the same
     // fixed-work spin — stage_trend.py annotates round-over-round
@@ -299,29 +327,9 @@ object Bench {
     // rides beside it so round-over-round comparisons stop needing
     // prose defense.
     val spinNow = (spinStart + spinEnd) / 2
-    val spinRef: Double =
-      (try {
-        import org.json4s._
-        import org.json4s.jackson.JsonMethods
-        Seq("BENCH_DETAIL.json", "/root/repo/BENCH_DETAIL.json")
-          .map(new java.io.File(_)).find(_.exists())
-          .flatMap { f =>
-            val h = JsonMethods.parse(
-              java.nio.file.Files.readString(f.toPath)) \ "host"
-            def num(v: JValue): Option[Double] = v match {
-              case JDouble(x) => Some(x)
-              case JInt(x) => Some(x.toDouble)
-              case JLong(x) => Some(x.toDouble)
-              case _ => None
-            }
-            num(h \ "spin_ref").orElse {
-              for {
-                a <- num(h \ "spin_s_start")
-                b <- num(h \ "spin_s_end")
-              } yield (a + b) / 2
-            }
-          }
-      } catch { case _: Throwable => None }).getOrElse(spinNow)
+    val spinRef: Double = prevDetail.map(_ \ "host").flatMap(h =>
+      num(h \ "spin_ref").orElse(for (a <- num(h \ "spin_s_start");
+        b <- num(h \ "spin_s_end")) yield (a + b) / 2)).getOrElse(spinNow)
     val totalNorm =
       if (total > 0 && spinNow > 0) total * spinRef / spinNow else -1.0
     val hostJson = f"""{"cpus":$cpus,"loadavg_start":$loadStart,""" +
@@ -329,79 +337,22 @@ object Bench {
       f""""spin_s_end":$spinEnd%.3f,"spin_ref":$spinRef%.3f}"""
     val detail =
       s"""{"metric":"total","value":$total,"value_load_normalized":$totalNorm,"unit":"sec","queries":$qs,"errors":$errJson,"remeasured":$remeasureJson,"skew":$skewJson,"skew_isolated":$skewIsoJson,"stages":$stagesJson,"critical_path":$criticalJson,"sweep":$sweepJson,"trend_regressions":$trendJson,"host":$hostJson,"sf":"$sfDir"}"""
-    Seq("BASELINE.md", "/root/repo/BASELINE.md")
-      .map(new java.io.File(_)).find(_.exists())
-      .map(_.getAbsoluteFile.getParentFile).foreach { repo =>
-        if (args.isEmpty) // full-suite runs only — don't clobber on iteration
-          java.nio.file.Files.writeString(
-            new java.io.File(repo, "BENCH_DETAIL.json").toPath, detail)
-      }
-    // The round artifact (BENCH_rNN.json) stores only the LAST 2000
-    // chars of stdout and tries to parse a JSON line out of them — a
-    // full-map contract line is ~6 KB at 200+ queries, so its head was
-    // always cut and every round's artifact recorded parsed:null
-    // (r01–r08). stdout therefore carries exactly ONE JSON line (a
-    // second full-map line would be a same-"metric" ambiguity for any
-    // consumer that greps rather than takes the last line): the
-    // SIZE-BOUNDED summary — true total + errors + the slowest queries
-    // that fit a fixed budget + queries_omitted — with the complete
-    // per-query map in the committed BENCH_DETAIL.json.
-    val budget = 1750 // line budget; sticky entries + the ~80-char sbt
-    // epilogue must stay inside the driver's 2000-char stdout tail
-    // STICKY PRINTED SET (r13, the r12 verdict's item 7): the budgeted
-    // map used to print only the CURRENT slowest queries, so a query
-    // that got FASTER fell out of the printed map and the driver's
-    // round-over-round comparator misread it as dropped_from_bench
-    // (15 phantom drops in PERF_r12). Every query the PREVIOUS round's
-    // committed contract line printed (the newest BENCH_r*.json's
-    // parsed queries map) is therefore printed UNCONDITIONALLY; the
-    // remaining budget fills slowest-first as before. The printed set
-    // can only grow until the budget saturates — a cosmetic cap on new
-    // entries, never a phantom drop.
+    // full-suite runs only — don't clobber on iteration
+    if (args.isEmpty && new java.io.File("BASELINE.md").exists())
+      java.nio.file.Files.writeString(
+        java.nio.file.Path.of("BENCH_DETAIL.json"), detail)
+    // the sticky set: the newest committed BENCH_r*.json's parsed map
+    val arts = Option(new java.io.File(".").listFiles()).getOrElse(Array.empty)
+      .filter(_.getName.matches("BENCH_r\\d+\\.json"))
     val prevPrinted: Set[String] =
-      (try {
-        import org.json4s._
-        import org.json4s.jackson.JsonMethods
-        Seq(".", "/root/repo").map(new java.io.File(_))
-          .find(d => new java.io.File(d, "BASELINE.md").exists())
-          .flatMap { repo =>
-            val arts = Option(repo.listFiles()).getOrElse(Array.empty)
-              .filter(f => f.getName.matches("BENCH_r\\d+\\.json"))
-            if (arts.isEmpty) None
-            else {
-              val newest = arts.maxBy(
-                _.getName.stripPrefix("BENCH_r").stripSuffix(".json").toInt)
-              JsonMethods.parse(java.nio.file.Files.readString(
-                newest.toPath)) \ "parsed" \ "queries" match {
-                case JObject(fields) => Some(fields.map(_._1).toSet)
-                case _ => None
-              }
-            }
-          }
-      } catch { case _: Throwable => None }).getOrElse(Set.empty)
-    val slowest = reported.toSeq.filter(_._2 >= 0).sortBy(-_._2)
-    val fixed = s"""{"metric":"total","value":$total,""" +
-      f""""value_load_normalized":$totalNorm%.1f,"unit":"sec",""" +
-      s""""queries":{},"queries_omitted":000,""" +
-      s""""queries_total":${reported.size},"errors":$errJson,""" +
-      s""""remeasured_n":${remeasured.size},""" +
-      s""""detail":"BENCH_DETAIL.json","sf":"$sfDir"}"""
-    val entries = scala.collection.mutable.ListBuffer.empty[String]
-    var used = fixed.length
-    slowest.foreach { case (q, t) =>
-      val e = f""""$q":$t%.2f"""
-      val sticky = prevPrinted.contains(q)
-      if (sticky || used + e.length + 1 <= budget) {
-        entries += e; used += e.length + 1
-      }
-    }
-    println(s"""{"metric":"total","value":$total,""" +
-      f""""value_load_normalized":$totalNorm%.1f,"unit":"sec",""" +
-      s""""queries":${entries.mkString("{", ",", "}")},""" +
-      s""""queries_omitted":${reported.size - entries.size},""" +
-      s""""queries_total":${reported.size},"errors":$errJson,""" +
-      s""""remeasured_n":${remeasured.size},""" +
-      s""""detail":"BENCH_DETAIL.json","sf":"$sfDir"}""")
+      if (arts.isEmpty) Set.empty
+      else readJson(arts.maxBy(_.getName.filter(_.isDigit).toInt).getPath)
+        .map(_ \ "parsed" \ "queries") match {
+          case Some(JObject(fields)) => fields.map(_._1).toSet
+          case _ => Set.empty
+        }
+    println(contractLine(total, totalNorm, reported, timing.errors.toSeq.sorted,
+      timing.remeasured.size, prevPrinted, sfDir))
     spark.stop()
   }
 }

@@ -4,10 +4,11 @@ import org.apache.spark.sql.SparkSession
 
 /** THE session-conf contract, in one place (r13, the r12 verdict's
   * item 9 and the r12 advisor's top item): every harness main — the
-  * bench (Bench/Bench10x), the plan evidence (ExplainDump/PlanOne),
-  * the profiler (ProfileQuery) AND the oracle gate (Verify) — builds
-  * its session here, so the benchmarked configuration and the verified
-  * configuration cannot drift, and a production consumer of
+  * bench (Bench), the oracle gate (Verify), the plan audit and plan
+  * evidence (Plans) AND the stress runs (ScaleStress: ratio, clustered
+  * ANN, the 10× gate, the per-stage profile) — builds its session here
+  * and nowhere else, so the benchmarked, verified and stressed
+  * configurations cannot drift, and a production consumer of
   * `SparkEntry.queries` has a named recipe instead of folklore.
   *
   * What the contract sets and why (full rationale at each conf):
@@ -60,8 +61,7 @@ object GraftSession {
     else System.getProperty("java.io.tmpdir")
   })
 
-  /** The contract session builder. `shufflePartitions` defaults to the
-    * core count; stress mains pass their own. */
+  /** The contract session builder; shuffle partitions = core count. */
   def builder(): SparkSession.Builder = {
     val c = cpus
     SparkSession.builder()

@@ -1,23 +1,42 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
-/** Plan auditor: executes every declared query on a small SF and prints a
-  * one-line physical summary — shuffle/sort/join node counts and scan
-  * column width — the ".explain and iterate" loop (SURVEY.md §7) made
-  * repeatable. Run: `sbt "runMain graft.Plans [sfDir]"`. */
+/** Plan auditor and plan-text dumper (the ".explain and iterate" loop
+  * of SURVEY.md §7), on the GraftSession contract so plans are captured
+  * under the benchmarked configuration. `runMain graft.Plans [sfDir]
+  * [q_a,q_b [outDir tag]]`: with no names, one physical-summary line per
+  * declared query (exchange/sort/agg counts, joins, scan widths); with
+  * names, each query's final ADAPTIVE plan after collect() (count() would
+  * finalize a different QueryExecution); with outDir and tag, each
+  * query's unexecuted `.explain("formatted")` text written to
+  * `<outDir>/<name>_<tag>.txt` (the plans/rNN/ evidence). */
 object Plans extends AdaptiveSparkPlanHelper {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    try run(spark, args) finally spark.stop()
+  }
+
+  def run(spark: SparkSession, args: Array[String]): Unit = {
+    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
+    if (args.length > 1) args(1).split(',').foreach { n =>
+      val df = SparkEntry.queries(n)(spark, sfDir)
+      try args.lift(2) match {
+        case None =>
+          df.collect()
+          println(df.queryExecution.executedPlan.toString)
+        case Some(outDir) =>
+          val txt = df.queryExecution.explainString(FormattedMode)
+          val f = new java.io.File(outDir, s"${n}_${args(3)}.txt")
+          f.getParentFile.mkdirs()
+          java.nio.file.Files.writeString(f.toPath, txt)
+          println(s"[explain] wrote ${f.getName} (${txt.length} chars)")
+      } finally ScratchCache.release()
+    }
+    else SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)
         df.collect()
@@ -57,6 +76,5 @@ object Plans extends AdaptiveSparkPlanHelper {
         case e: Throwable => println(s"$name FAILED: ${e.getMessage}")
       }
     }
-    spark.stop()
   }
 }

@@ -3,6 +3,9 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import java.nio.file.StandardOpenOption.{APPEND, CREATE}
+import org.json4s._
+import org.json4s.jackson.JsonMethods.{compact, render}
 
 /** Empirical scale-stress harness: converts the "this plan survives
   * 100×" arguments (SURVEY §2 scale notes, PLANS.md shapes) into a
@@ -43,8 +46,16 @@ import org.apache.spark.sql.functions._
   *     disjoint copies of the same topology and per-user streaming
   *     state sees factor× distinct keys.
   *
-  * Run: `sbt "runMain graft.ScaleStress [baseSfDir] [factor] [out]"`
-  * Writes the per-query rows to SCALE_r06.json (committed artifact).
+  * This is the one stress main; every subcommand runs on the
+  * `GraftSession` contract and prepares its corpora through [[corpora]]:
+  *
+  *  - `ratio [baseSfDir] [factor] [outJson] [queries] [mode]` — the
+  *    1× vs factor× measurement above (SCALE_rNN*.json);
+  *  - `ann [baseSfDir] [factor] [outJson] [mode]` — the clustered-ANN
+  *    gates of [[AnnClusteredStress]] (SCALE_rNN_clustered_ann*.json);
+  *  - `gate10x [baseSfDir]` — the 10× bench gate (BENCH_10x.json);
+  *  - `profile q_name [corpusDirOrFactor] [runs] [mode]` — the
+  *    per-stage drill-down of one query.
   */
 object ScaleStress extends AdaptiveSparkPlanHelper {
 
@@ -383,28 +394,15 @@ object ScaleStress extends AdaptiveSparkPlanHelper {
   private final case class ArtRow(json: String, ratio: Double,
       planEqual: Boolean, skew: Option[Double])
 
-  def main(args: Array[String]): Unit = {
-    val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
+  /** The 1× vs factor× ratio run (the method above). */
+  private def ratio(spark: SparkSession, args: Array[String]): Unit = {
+    val baseDir = args.headOption.getOrElse(Sf01)
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
-    val outJson = args.lift(2).getOrElse("/root/repo/SCALE_r06.json")
+    val outJson = args.lift(2).getOrElse("SCALE_r06.json")
     val only = args.lift(3).map(_.split(',').toSet)
     val mode = args.lift(4).getOrElse("default")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val root = s"${ProcScratch.base}/scale"
-    val dir1 = s"$root/sf1x"
-    val dirN = s"$root/sf${factor}x"
-    println(s"[scale] generating 1x at $dir1 and ${factor}x at $dirN " +
-      s"from $baseDir (mode=$mode)")
-    generate(spark, baseDir, dir1, 1, mode = mode)
-    generate(spark, baseDir, dirN, factor, mode = mode)
+    val Seq(dir1, dirN) =
+      corpora(spark, baseDir, "scale", (1, mode), (factor, mode))
 
     val analyzer = new metrics.StageAnalyzer
     spark.sparkContext.addSparkListener(analyzer)
@@ -415,18 +413,26 @@ object ScaleStress extends AdaptiveSparkPlanHelper {
         .foreach(t => spark.read.parquet(s"$d/$t.parquet").count())
     }
     val failed = scala.collection.mutable.ListBuffer.empty[(String, String)]
+    // record and continue — one broken query must not cost the whole
+    // run's artifact
+    def fail(q: String, e: Throwable): None.type = {
+      val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
+        .takeWhile(_ != '\n').take(200).replace("\"", "'")
+      println(s"[scale] $q FAILED: $msg")
+      failed += ((q, msg))
+      None
+    }
     val rows = queries.flatMap { q =>
       SparkEntry.queries.get(q).flatMap { fn => try {
         // small scale first (also the codegen warm-up for the query),
         // best-of-2 per scale: the MIN is the right statistic for a
         // ratio — noise only ever inflates
-        def best(dir: String, label: String): (Double, PlanSig) = {
-          val a = timeOne(spark, fn, dir, analyzer, label)
-          spark.catalog.clearCache()
-          val b = timeOne(spark, fn, dir, analyzer, label)
-          spark.catalog.clearCache()
-          if (a._1 <= b._1) a else b
-        }
+        def best(dir: String, label: String): (Double, PlanSig) =
+          Seq.fill(2) {
+            val r = timeOne(spark, fn, dir, analyzer, label)
+            spark.catalog.clearCache()
+            r
+          }.minBy(_._1)
         val (t1, sig1) = best(dir1, s"${q}@1x")
         analyzer.reset() // keep skew attribution = the FACTOR× runs only
         val (tN, sigN) = best(dirN, s"${q}@${factor}x")
@@ -435,28 +441,14 @@ object ScaleStress extends AdaptiveSparkPlanHelper {
         println(f"[scale] $q%-24s t1=$t1%6.2fs t$factor=$tN%7.2fs " +
           f"ratio=$ratio%5.2f planEqual=$planEqual")
         Some((q, t1, tN, ratio, sig1, sigN))
-      } catch { case e: Throwable =>
-        // record and continue — one broken query must not cost the
-        // whole run's artifact
-        val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-          .takeWhile(_ != '\n').take(200).replace("\"", "'")
-        println(s"[scale] $q FAILED: $msg")
-        failed += ((q, msg))
-        None
-      } }
+      } catch { case e: Throwable => fail(q, e) } }
     }
     // fixed-size-delta CDC experiment (skipped only when an explicit
     // subset excludes it)
     val cdcFresh: Option[String] =
       if (only.forall(_.contains("x_cdc_delta")))
         try Some(cdcDeltaExperiment(spark, dir1, dirN, factor))
-        catch { case e: Throwable =>
-          val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-            .takeWhile(_ != '\n').take(200).replace("\"", "'")
-          println(s"[scale] cdc_delta FAILED: $msg")
-          failed += (("x_cdc_delta", msg))
-          None
-        }
+        catch { case e: Throwable => fail("x_cdc_delta", e) }
       else None
 
     Thread.sleep(1500) // drain listener bus before reading skew
@@ -478,40 +470,21 @@ object ScaleStress extends AdaptiveSparkPlanHelper {
     // evidence — and the SUMMARY is recomputed from the MERGED rows,
     // so a kept row's breach/skew flag survives a subset re-run (the
     // r06 artifact bug: summary reflected only the fresh subset).
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    val prior: Option[JValue] = {
-      val f = new java.io.File(outJson)
-      if (only.isEmpty || !f.exists()) None
-      else try {
-        val old = JsonMethods.parse(java.nio.file.Files.readString(f.toPath))
-        val oldMode = old \ "mode" match {
-          case JString(m) => m
-          case _ => "default"
-        }
-        if ((old \ "base_sf") == JString(baseDir) &&
-          (old \ "factor") == JInt(factor) && oldMode == mode) Some(old)
-        else None
-      } catch { case _: Throwable => None }
-    }
-    def num(v: JValue): Option[Double] = v match {
-      case JDouble(d) => Some(d)
-      case JInt(i) => Some(i.toDouble)
-      case JDecimal(d) => Some(d.toDouble)
-      case _ => None
-    }
-    val keptRows: Map[String, ArtRow] = prior match {
-      case Some(old) => old \ "queries" match {
-        case JObject(fields) => fields.collect {
-          case (q, v) if !freshRows.contains(q) =>
-            q -> ArtRow(JsonMethods.compact(JsonMethods.render(v)),
-              num(v \ "ratio").getOrElse(Double.NaN),
-              (v \ "plan_equal") == JBool(true),
-              num(v \ s"skew_${factor}x"))
-        }.toMap
-        case _ => Map.empty[String, ArtRow]
+    val prior: Option[JValue] =
+      (if (only.isEmpty) None else Bench.readJson(outJson)).filter { old =>
+        val oldMode = old \ "mode" match { case JString(m) => m; case _ => "default" }
+        (old \ "base_sf") == JString(baseDir) &&
+          (old \ "factor") == JInt(factor) && oldMode == mode
       }
-      case None => Map.empty[String, ArtRow]
+    val keptRows: Map[String, ArtRow] = prior.map(_ \ "queries") match {
+      case Some(JObject(fields)) => fields.collect {
+        case (q, v) if !freshRows.contains(q) =>
+          q -> ArtRow(compact(render(v)),
+            Bench.num(v \ "ratio").getOrElse(Double.NaN),
+            (v \ "plan_equal") == JBool(true),
+            Bench.num(v \ s"skew_${factor}x"))
+      }.toMap
+      case _ => Map.empty
     }
     // kept errors: a prior run's failure stays on record unless this
     // run re-attempted that query
@@ -520,43 +493,34 @@ object ScaleStress extends AdaptiveSparkPlanHelper {
        else Set.empty[String])
     val keptErrors: Seq[(String, String)] = prior.toSeq.flatMap { old =>
       old \ "summary" \ "errors" match {
-        case JArray(items) => items.collect {
-          case obj if (obj \ "query") != JNothing =>
-            val q = obj \ "query" match { case JString(s) => s; case _ => "" }
-            val m = obj \ "error" match { case JString(s) => s; case _ => "" }
-            (q, m)
-        }.filter { case (q, _) => q.nonEmpty && !attempted.contains(q) }
+        case JArray(items) => items.map(o => (o \ "query", o \ "error")).collect {
+          case (JString(q), m) if q.nonEmpty && !attempted.contains(q) =>
+            (q, m match { case JString(s) => s; case _ => "" })
+        }
         case _ => Seq.empty
       }
     }
-    val cdcJson: Option[String] = cdcFresh.orElse(prior.flatMap { old =>
-      old \ "cdc_delta" match {
-        case JNothing | JNull => None
-        case v => Some(JsonMethods.compact(JsonMethods.render(v)))
-      }
-    })
+    val cdcJson: Option[String] = cdcFresh.orElse(prior.map(_ \ "cdc_delta")
+      .filter(v => v != JNothing && v != JNull)
+      .map(v => compact(render(v))))
 
     val mergedRows = keptRows ++ freshRows
     val allErrors = keptErrors ++ failed.toSeq
     val linearBound = factor * 1.5
     val summary = {
-      val over = mergedRows.collect {
-        case (q, r) if r.ratio > linearBound => q }.toSeq.sorted
-      val planDiff = mergedRows.collect {
-        case (q, r) if !r.planEqual => q }.toSeq.sorted
+      def where(p: ArtRow => Boolean): String = Bench.jsonStrs(
+        mergedRows.collect { case (q, r) if p(r) => q }.toSeq.sorted)
       val skews = mergedRows.values.flatMap(_.skew)
-      // the 20x task-skew alarm line (Scaladoc above) is now a GATE,
-      // not a narrative convention: r08's 38.2x flag on a probe2 row
-      // rode in silently because only ratio breaches populated a
-      // breach list — a straggler class must fail loudly
-      val skewOver = mergedRows.collect {
-        case (q, r) if r.skew.exists(_ > 20.0) => q }.toSeq.sorted
       s"""{"queries_run":${mergedRows.size},""" +
         s""""errors":${allErrors.map { case (q, m) =>
           s"""{"query":"$q","error":"$m"}""" }.mkString("[", ",", "]")},""" +
-        s""""ratio_gt_${factor}x1.5":${over.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-        s""""plan_shape_changed":${planDiff.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-        s""""skew_gt_20":${skewOver.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
+        s""""ratio_gt_${factor}x1.5":${where(_.ratio > linearBound)},""" +
+        s""""plan_shape_changed":${where(!_.planEqual)},""" +
+        // the 20x task-skew alarm line (Scaladoc above) is now a GATE,
+        // not a narrative convention: r08's 38.2x flag on a probe2 row
+        // rode in silently because only ratio breaches populated a
+        // breach list — a straggler class must fail loudly
+        s""""skew_gt_20":${where(_.skew.exists(_ > 20.0))},""" +
         s""""max_skew":${if (skews.isEmpty) "null" else f"${skews.max}%.1f"}}"""
     }
     val qJson = mergedRows.toSeq.sortBy(_._1)
@@ -567,11 +531,198 @@ object ScaleStress extends AdaptiveSparkPlanHelper {
         cdcJson.map(c => s""""cdc_delta":$c,""").getOrElse("") +
         s""""summary":$summary""" +
         (if (keptRows.nonEmpty)
-          s""","merged_subset":${rows.map(r => "\"" + r._1 + "\"")
-            .mkString("[", ",", "]")}}"""
+          s""","merged_subset":${Bench.jsonStrs(rows.map(_._1))}}"""
          else "}")
     java.nio.file.Files.writeString(java.nio.file.Path.of(outJson), out)
     println(s"[scale] wrote $outJson")
-    spark.stop()
+  }
+
+  /** The fixture every corpus grows from unless a base dir is given. */
+  private val Sf01 = "/root/testdata/sf0.1"
+
+  /** The one corpus-preparation step of every subcommand: the headroom
+    * check for all corpora first, then each (factor, mode) corpus at
+    * `<ProcScratch.base>/<tag>/sf<factor>x_<mode>`. */
+  private[graft] def corpora(spark: SparkSession, baseDir: String,
+      tag: String, specs: (Int, String)*): Seq[String] = {
+    checkHeadroom(spark, baseDir, specs.map(_._1))
+    specs.map { case (factor, mode) =>
+      val d = s"${ProcScratch.base}/$tag/sf${factor}x_$mode"
+      println(s"[scale] generating ${factor}x (mode=$mode) at $d from $baseDir")
+      generate(spark, baseDir, d, factor, mode = mode)
+      d
+    }
+  }
+
+  /** Scratch headroom guard (10×–100× corpora could silently fill a
+    * tmpfs): the estimate, base bytes × the summed factors, must fit the
+    * scratch filesystem and the `spark.local.dir` one (which takes the
+    * generator's shuffle) — twice when they are the same. */
+  private def checkHeadroom(spark: SparkSession, baseDir: String,
+      factors: Seq[Int]): Unit = {
+    import java.io.File
+    def bytes(f: File): Long =
+      if (f.isDirectory) f.listFiles().map(bytes).sum else f.length()
+    def existing(f: File): File = if (f.exists()) f else existing(f.getParentFile)
+    val need = bytes(new File(baseDir)) * factors.map(_.toLong).sum
+    val local = spark.sparkContext.getConf
+      .get("spark.local.dir", System.getProperty("java.io.tmpdir"))
+    Seq(ProcScratch.base, local).map(p => existing(new File(p).getAbsoluteFile))
+      .groupBy(f => java.nio.file.Files.getFileStore(f.toPath)).values
+      .foreach { targets =>
+        val free = targets.head.getUsableSpace
+        require(need * targets.size < free, f"[scale] the corpora need " +
+          f"~${need * targets.size / 1e9}%.2f GB on ${targets.mkString(" and ")}" +
+          f" but ${free / 1e9}%.2f GB is free: point SPARK_GRAFT_SCRATCH_DIR /" +
+          " SPARK_GRAFT_LOCAL_DIR at a larger filesystem")
+      }
+  }
+
+  /** 10×-gated beside the ratio set: their driver table (orders) rides
+    * unscaled in the ratio run, but their 10× wall time is a real signal. */
+  private val Extras10x =
+    Seq("q_delta_merge", "q_pipeline_recovery", "q_keyed_compact")
+
+  /** The 10× gate's clustered phase (r09): the trained-ANN family's
+    * deployment profile is density-skewed data. */
+  private val Clustered10x = Seq(
+    "q_ann_ivf_trained", "q_ann_ivf_trained_probe2",
+    "q_ann_ivf_trained_probe3", "q_ann_ivf_trained_dist",
+    "q_ann_ivf_trained_probe3_dist",
+    "q_ann_ivf_trained_l3", "q_ann_ivf_trained_l3_probe2",
+    "q_ann_incremental_trained", "q_stream_ann_ingest", "q_ann_delete",
+    "q_ann_incremental_l3", "q_stream_ann_ingest_l3", "q_ann_delete_l3",
+    "q_ann_index_auto", "q_ann_index_auto_l3",
+    "q_ann_ivfpq_trained", "q_ann_ivfpq_trained256", "q_ann_ivfpq_res256",
+    "q_ann_lsh_adaptive", "q_dedup_semantic", "q_dedup_semantic_mp",
+    "q_dedup_embedding_probe2", "q_dedup_embedding_probe3",
+    "q_dedup_embedding_adaptive", "q_dedup_semantic_adaptive",
+    "q_ann_ivf_trained_adaptive", "q_ann_ivf_trained_l3_adaptive",
+    "q_ann_ivfpq_rerank", "q_ann_ivfpq_adaptive",
+    "q_ann_ivfpq_l3_rerank", "q_ann_ivf_sq8", "q_ann_ivf_sq8_rerank")
+
+  /** The 10× bench gate: plan-dominated timings where sf0.1 sits on the
+    * scheduling floor. The stress set (+ [[Extras10x]]) runs on the 10×
+    * corpus, [[Clustered10x]] on the 10× clustered one, through Bench's
+    * timing core against BASELINE_10x.md (`@clustered` rows for the
+    * clustered phase; a query with no row gets one appended). Writes
+    * BENCH_10x.json, whose bounded `runs` array keeps each run's breach
+    * set and host record (r12). Keep the host otherwise idle. */
+  private def gate10x(spark: SparkSession, args: Array[String]): Unit = {
+    val baseDir = args.headOption.getOrElse(
+      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", Sf01))
+    // ambient-load record (r11, same device as Bench): co-tenant waves
+    // shift 10× wall times uniformly 1.1-1.4×, which reads as phantom 2×
+    // breaches — the artifact carries the measured interference
+    val loadStart = Bench.loadAvg()
+    val spinStart = Bench.spinProbe()
+    val Seq(dir, cdir) = corpora(spark, baseDir, "bench10x",
+      (10, "default"), (10, "clustered"))
+    Bench.warm(spark, dir, Seq("documents", "embeddings", "events", "lineitem", "orders"))
+    def phase(names: Seq[String], corpus: String, suffix: String)
+        : (String, Bench.Timing, Seq[String]) = {
+      val anchors = Bench.anchors("BASELINE_10x.md").collect {
+        case (k, v) if k.endsWith(suffix) => k.stripSuffix(suffix) -> v }
+      val (t, _) = Bench.timeQueries(spark, corpus, names, anchors, None)(())
+      // first run (or newly added queries): append first-recorded rows
+      // so the NEXT round has an anchor — BASELINE.md's protocol
+      val missing = t.suite.filter { case (q, s) => s > 0 && !anchors.contains(q) }
+      if (missing.nonEmpty) {
+        val f = new java.io.File("BASELINE_10x.md")
+        val header = if (f.exists()) "" else "| query | first_s |\n|---|---|\n"
+        java.nio.file.Files.writeString(f.toPath, header + missing.map {
+          case (q, s) => f"| $q$suffix | $s%.3f |\n" }.mkString, CREATE, APPEND)
+        println(s"[bench10x] recorded ${missing.size} new baseline rows$suffix")
+      }
+      val both = t.reported.filter { case (q, s) => s > 0 && anchors.contains(q) }
+      val den = both.map { case (q, _) => anchors(q) }.sum
+      val ratio = if (den > 0) both.map(_._2).sum / den else -1.0
+      val breaches = t.breaches(anchors).map(_ + suffix)
+      val json = s""""queries":${t.reported.map { case (q, s) =>
+          f""""$q$suffix":$s%.3f""" }.mkString("{", ",", "}")},""" +
+        s""""gate_2x_breaches":${Bench.jsonStrs(breaches)},""" +
+        s""""remeasured":${t.remeasured.map { case (q, s0, i0) =>
+          f""""$q$suffix":{"suite":$s0%.3f,"isolated":$i0%.3f}"""
+        }.mkString("{", ",", "}")},""" +
+        f""""vs_baseline_ratio":$ratio%.2f"""
+      (json, t.copy(errors = t.errors.map(_ + suffix)), breaches)
+    }
+    val (defaultJson, dt, defaultBreaches) = phase(
+      (StressQueries ++ Extras10x).filter(SparkEntry.queries.contains), dir, "")
+    spark.read.parquet(s"$cdir/embeddings.parquet").count(): Unit
+    val (clusteredJson, ct, clusteredBreaches) = phase(
+      Clustered10x.filter(SparkEntry.queries.contains), cdir, "@clustered")
+    val errors = (dt.errors ++ ct.errors).toSeq.sorted
+    val total = if (errors.nonEmpty) -1.0
+      else (dt.reported ++ ct.reported).map(_._2).filter(_ >= 0).sum
+    val loadEnd = Bench.loadAvg()
+    val spinEnd = Bench.spinProbe()
+    val hostJson = f""""loadavg_start":$loadStart,"loadavg_end":$loadEnd,""" +
+      f""""spin_s_start":$spinStart%.3f,"spin_s_end":$spinEnd%.3f"""
+    val runEntry = f"""{"value":$total%.1f,"breaches":${Bench.jsonStrs(
+      (defaultBreaches ++ clusteredBreaches).sorted)},$hostJson}"""
+    val out = "BENCH_10x.json"
+    val prevRuns = Bench.readJson(out).map(_ \ "runs") match {
+      case Some(JArray(rs)) => rs.map(r => compact(render(r)))
+      case _ => Nil
+    }
+    val line =
+      f"""{"metric":"total_10x","value":$total%.1f,"unit":"sec","factor":10,""" +
+        defaultJson + s""","errors":${Bench.jsonStrs(errors)},""" +
+        s""""clustered":{$clusteredJson},""" +
+        s""""host":{"cpus":${GraftSession.cpus},$hostJson},""" +
+        s""""runs":${(prevRuns :+ runEntry).takeRight(10).mkString("[", ",", "]")},""" +
+        s""""base_sf":"$baseDir"}"""
+    java.nio.file.Files.writeString(java.nio.file.Path.of(out), line)
+    println(line)
+    println(s"[bench10x] default breaches=${defaultBreaches.size} " +
+      s"clustered breaches=${clusteredBreaches.size}")
+  }
+
+  /** Per-stage drill-down of ONE declared query (the job-analyzer
+    * parity surface; tez-tools' SkewAnalyzer): when a bench or ratio
+    * skew flag fires, this names the stage — wall time and every
+    * stage's StageAnalyzer row, for each of `runs` passes. A bare
+    * integer as the corpus synthesizes that factor from sf0.1 first
+    * (deterministic: bit-identical to the corpus that flagged). */
+  private def profile(spark: SparkSession, args: Array[String]): Unit = {
+    val name = args.headOption.getOrElse(sys.error(
+      "usage: ScaleStress profile q_name [corpusDirOrFactor] [runs] [mode]"))
+    val dirArg = args.lift(1).getOrElse(Sf01)
+    val dir = dirArg.toIntOption.fold(dirArg)(f => corpora(spark, Sf01,
+      "profile", (f, args.lift(3).getOrElse("default"))).head)
+    val analyzer = new metrics.StageAnalyzer
+    spark.sparkContext.addSparkListener(analyzer)
+    (1 to args.lift(2).map(_.toInt).getOrElse(2)).foreach { pass =>
+      spark.catalog.clearCache()
+      analyzer.reset()
+      analyzer.setLabel(name)
+      val t0 = System.nanoTime()
+      // count(), not collect(): a pair-heavy result collected to the
+      // driver (quadratic in cluster mass at 100x) would OOM it
+      try SparkEntry.queries(name)(spark, dir).count()
+      finally ScratchCache.release()
+      val sec = (System.nanoTime() - t0) / 1e9
+      Thread.sleep(1200) // drain the listener bus
+      println(f"[profile] $name pass $pass: $sec%.2fs on $dir")
+      analyzer.report().getOrElse(name, Nil)
+        .foreach(r => println(s"[profile]   ${r.json}"))
+      analyzer.skewFlags().get(name).foreach(v =>
+        println(f"[profile]   WORST SKEW $v%.1f"))
+    }
+  }
+
+  def main(args: Array[String]): Unit = {
+    val run: (SparkSession, Array[String]) => Unit = args.headOption match {
+      case Some("ratio") => ratio
+      case Some("ann") => AnnClusteredStress.run
+      case Some("gate10x") => gate10x
+      case Some("profile") => profile
+      case _ => sys.error("usage: ScaleStress ratio|ann|gate10x|profile [args]")
+    }
+    // the shared session contract; no subcommand adds a conf to it
+    val spark = GraftSession.builder().getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    try run(spark, args.tail) finally spark.stop()
   }
 }

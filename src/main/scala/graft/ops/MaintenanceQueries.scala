@@ -264,27 +264,12 @@ object MaintenanceQueries {
         val mxKey = base.agg(org.apache.spark.sql.functions.max("o_orderkey"))
           .collect()(0).getLong(0) // bounded scalar
         val cuts = Seq(mxKey / 3, 2 * mxKey / 3)
-        // ONE partitioned write stages all 3 chunks (r13: this was 3
-        // coalesce(1) jobs over a persisted union — 3 scans + the
-        // persist; the chunk column is write-layout only, partitionBy
-        // drops it from the file bytes, and chunk content is identical:
-        // same key-range predicate, merge semantics are row-order
-        // invariant)
-        val stage = s"$root/_chg_stage"
-        cdcChanges(base)
-          .withColumn("__chunk", expr(
-            s"CASE WHEN o_orderkey < ${cuts(0)} THEN 0 " +
-              s"WHEN o_orderkey < ${cuts(1)} THEN 1 ELSE 2 END"))
-          .repartition(col("__chunk"))
-          .write.mode("overwrite").partitionBy("__chunk").parquet(stage)
-        fs.mkdirs(new org.apache.hadoop.fs.Path(watch))
-        (0 until 3).foreach { i =>
-          val part = fs.listStatus(
-              new org.apache.hadoop.fs.Path(s"$stage/__chunk=$i"))
-            .map(_.getPath).find(_.getName.endsWith(".parquet")).get
-          fs.rename(part, new org.apache.hadoop.fs.Path(watch, f"chg_$i.parquet"))
-        }
-        val chgSchema = s.read.parquet(watch).schema
+        // ONE partitioned write stages all 3 chunks (merge semantics
+        // are row-order invariant, so chunk content is all that counts)
+        val chgSchema = graft.sources.Sources.stageChunks(s, cdcChanges(base),
+          expr(s"CASE WHEN o_orderkey < ${cuts(0)} THEN 0 " +
+            s"WHEN o_orderkey < ${cuts(1)} THEN 1 ELSE 2 END"),
+          3, s"$root/_chg_stage", watch, "chg")
         val q = s.readStream.schema(chgSchema)
           .option("maxFilesPerTrigger", "1").parquet(watch)
           .writeStream
@@ -571,8 +556,11 @@ object MaintenanceQueries {
     "q_snapshot_catalog" -> QueryDef(
       (s, dir) => {
         import graft.sources.SnapshotCatalog
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_snapcat").toString
+        // per-process scratch, cleared before use (q_stream_cdc's root)
+        val root = s"${graft.ProcScratch.base}/snapcat/${new java.io.File(dir).getName}"
+        new org.apache.hadoop.fs.Path(root)
+          .getFileSystem(s.sparkContext.hadoopConfiguration)
+          .delete(new org.apache.hadoop.fs.Path(root), true)
         val base = Tables.orders(s, dir).selectExpr(
           "o_orderkey",
           "CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS cents")

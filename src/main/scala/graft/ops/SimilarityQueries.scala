@@ -1233,9 +1233,10 @@ object SimilarityQueries {
     * single-probe candidate mass, vs the fixed probe3 set's 0.151 at
     * 2.64× — the best measured ≤4.1×-mass point. maxProbes IS the
     * stated mass budget (probe side only fans out; measured mass runs
-    * ~20% under the cap); ProbeTune is the knob-picking tool when a
-    * different retention/budget point is wanted, and it is also the
-    * honest record that the frontier slope is ~0.05 retention per 1×
+    * ~20% under the cap); that sweep (the retired ProbeTune main, in
+    * git history) picks the knobs when a different retention/budget
+    * point is wanted, and it is also the honest record that the
+    * frontier slope is ~0.05 retention per 1×
     * mass on this corpus — truth grows quadratically in cluster mass,
     * so a pair-retention target like 0.30 needs ~6× mass, while the
     * REMOVAL decision (any one found partner suffices) measures 1.000
@@ -3016,25 +3017,11 @@ object SimilarityQueries {
         e.filter(col("vec_id") % 10 =!= 0)
           .select("vec_id", "embedding", "n2", "cell")
           .write.partitionBy("cell").parquet(s"$root/corpus")
-        // the arrival feed: 3 key-disjoint chunks (vec_id/10 mod 3),
-        // staged by ONE partitioned write (r13: was 3 coalesce(1) jobs
-        // over a persisted frame; the chunk column is write-layout
-        // only — partitionBy drops it from the file bytes, and chunk
-        // content is the identical key predicate)
-        val arrStage = s"$root/_arr_stage"
-        e.filter(col("vec_id") % 10 === 0)
-          .select("vec_id", "embedding", "n2", "cell")
-          .withColumn("__chunk", expr("(vec_id div 10) % 3"))
-          .repartition(col("__chunk"))
-          .write.mode("overwrite").partitionBy("__chunk").parquet(arrStage)
-        fs.mkdirs(new org.apache.hadoop.fs.Path(watch))
-        (0 until 3).foreach { i =>
-          val part = fs.listStatus(
-              new org.apache.hadoop.fs.Path(s"$arrStage/__chunk=$i"))
-            .map(_.getPath).find(_.getName.endsWith(".parquet")).get
-          fs.rename(part, new org.apache.hadoop.fs.Path(watch, f"arr_$i.parquet"))
-        }
-        val arrSchema = s.read.parquet(watch).schema
+        // the arrival feed: 3 key-disjoint chunks (vec_id/10 mod 3)
+        val arrSchema = graft.sources.Sources.stageChunks(s,
+          e.filter(col("vec_id") % 10 === 0)
+            .select("vec_id", "embedding", "n2", "cell"),
+          expr("(vec_id div 10) % 3"), 3, s"$root/_arr_stage", watch, "arr")
         // hoisted OUT of the trigger body (r13): the served table is
         // immutable across triggers, so its directory listing + schema
         // inference need to run once, not once per micro-batch; the
@@ -3396,23 +3383,11 @@ object SimilarityQueries {
         e.filter(col("vec_id") % 10 =!= 0)
           .select("vec_id", "embedding", "n2", "cell")
           .write.partitionBy("cell").parquet(s"$root/corpus")
-        // one partitioned write stages all 3 key-disjoint chunks — the
-        // q_stream_ann_ingest staging treatment (r13)
-        val arrStage = s"$root/_arr_stage"
-        e.filter(col("vec_id") % 10 === 0)
-          .select("vec_id", "embedding", "n2", "cell")
-          .withColumn("__chunk", expr("(vec_id div 10) % 3"))
-          .repartition(col("__chunk"))
-          .write.mode("overwrite").partitionBy("__chunk").parquet(arrStage)
-        fs.mkdirs(new org.apache.hadoop.fs.Path(watch))
-        (0 until 3).foreach { i =>
-          val part = fs.listStatus(
-              new org.apache.hadoop.fs.Path(s"$arrStage/__chunk=$i"))
-            .map(_.getPath).find(_.getName.endsWith(".parquet")).get
-          fs.rename(part,
-            new org.apache.hadoop.fs.Path(watch, f"arr_$i.parquet"))
-        }
-        val arrSchema = s.read.parquet(watch).schema
+        // the q_stream_ann_ingest arrival feed: 3 key-disjoint chunks
+        val arrSchema = graft.sources.Sources.stageChunks(s,
+          e.filter(col("vec_id") % 10 === 0)
+            .select("vec_id", "embedding", "n2", "cell"),
+          expr("(vec_id div 10) % 3"), 3, s"$root/_arr_stage", watch, "arr")
         // hoisted corpus read — one listing/inference for all triggers
         // (q_stream_ann_ingest's rationale)
         val corpusBase = s.read.parquet(s"$root/corpus")
