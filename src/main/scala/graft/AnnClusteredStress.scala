@@ -83,7 +83,7 @@ object AnnClusteredStress {
   private def ndPairs(df: DataFrame): Set[(Long, Long)] = df
     .filter(col("query_id") =!= col("neighbor_id"))
     .selectExpr("query_id", "neighbor_id",
-      "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
+      s"${ops.SimilarityQueries.cosineExpr("qe", "ce", "qn2", "cn2")} AS cosine")
     .filter(col("cosine") >= 0.4)
     .select("query_id", "neighbor_id").collect()
     .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -154,7 +154,7 @@ object AnnClusteredStress {
       def top3(joined: DataFrame): Set[(Long, Long)] = joined
         .filter(col("query_id") =!= col("neighbor_id"))
         .selectExpr("query_id", "neighbor_id",
-          "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
+          s"${ops.SimilarityQueries.cosineExpr("qe", "ce", "qn2", "cn2")} AS cosine")
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 3)
         .select("query_id", "neighbor_id").collect()
@@ -294,7 +294,7 @@ object AnnClusteredStress {
       val mp3Mass = mpMass + probeMass("cell3")
 
       // ADAPTIVE multi-probe knob (r10, q_dedup_embedding_adaptive):
-      // the shipped (nSupers, maxProbes, eps, interleave) defaults,
+      // the shipped (nSupers, maxProbes, eps) defaults,
       // measured on the SAME truth beside the fixed-probe rows — plus
       // REMOVAL RECALL, the decision metric of a dedup pass (a row
       // with any true lower-id duplicate is removed iff the blocker
@@ -303,7 +303,7 @@ object AnnClusteredStress {
         ops.SimilarityQueries.AdaptNSupers,
         ops.SimilarityQueries.AdaptMaxProbes,
         ops.SimilarityQueries.AdaptEpsNum,
-        ops.SimilarityQueries.AdaptEpsDen, interleave = true).persist()
+        ops.SimilarityQueries.AdaptEpsDen).persist()
       val adpMass = adp.selectExpr("explode(probes) AS cell")
         .join(broadcast(cnt), "cell")
         .agg(coalesce(sum("bn"), lit(0L))).head.getLong(0).toDouble
@@ -341,7 +341,7 @@ object AnnClusteredStress {
         dir, ops.SimilarityQueries.AdaptNSupers,
         ops.SimilarityQueries.AdaptMaxProbes,
         ops.SimilarityQueries.AdaptEpsNum,
-        ops.SimilarityQueries.AdaptEpsDen, interleave = true)
+        ops.SimilarityQueries.AdaptEpsDen)
       val adpSwitchRoute = ops.SimilarityQueries.TrainedBuildStats.lastRoute
       val adpSwitchSeeds =
         ops.SimilarityQueries.TrainedBuildStats.lastDriverSeeds
@@ -651,8 +651,10 @@ object AnnClusteredStress {
       // probe query WAS a child seed). r12 decorrelated all three
       // (prime offsets, per-row geometric scramble, hash-drawn
       // probes); the books now agree at every factor and decline
-      // monotonically (L3IncProbe 10×: 0.229/0.229/0.232; 100×:
-      // 0.061/0.074/0.093 for full/control/inc).
+      // monotonically (full/control/inc l3_recall3_probe1 /
+      // l3_incsel_recall3_probe1 / l3_inc_recall3_probe1 — 10×:
+      // 0.229/0.229/0.232 in SCALE_r12_clustered_ann.json; 100×:
+      // 0.061/0.074/0.093 in SCALE_r12_clustered_ann_100x.json).
       val l3iT = ops.SimilarityQueries.trainedCellsL3Inc(spark, dir, "TRUE")
       val l3iTR1 = l3Recall(l3iT)
 

@@ -111,9 +111,12 @@ object ScaleStress extends AdaptiveSparkPlanHelper {
     * replica — at factor 100 all 100 recall-probe queries were
     * replicas of base row 0 and every one of them was itself a child
     * seed of the raw-modulus L3 book, which is why modulus-seeded
-    * recall ROSE with scale (graft.L3IncProbe: 0.78 vs 0.117 for the
-    * identical selection law without the resonance). A prime offset P
-    * is coprime to every stride m < P, so b ≡ −kP (mod m) walks a
+    * recall ROSE with scale (l3_recall3_probe1 0.78 at 100× in
+    * SCALE_r11_clustered_ann_100x.json, vs 0.074 for the identical
+    * selection law once the resonance was gone —
+    * l3_incsel_recall3_probe1 in SCALE_r12_clustered_ann_100x.json).
+    * A prime offset P is coprime to every stride m < P, so
+    * b ≡ −kP (mod m) walks a
     * DIFFERENT base residue per replica: modulus-selected samples
     * (seeds, probes, arrival splits) become ordinary samples of the
     * corpus. The per-row geometric scramble below removes the
@@ -206,9 +209,10 @@ object ScaleStress extends AdaptiveSparkPlanHelper {
         // 2000-row base — vec_id-modulus seeds (and the query sample,
         // whose stride divides the 10^7 replica offset) landed on the
         // SAME base origs in every replica, and every modulus-seeded
-        // recall number rode that symmetry (full L3 book 0.78 vs 0.117
-        // for the identical selection law without the resonance, at
-        // identical cells/occupancy — graft.L3IncProbe). The replica
+        // recall number rode that symmetry (full L3 book 0.78 at 100×
+        // in SCALE_r11_clustered_ann_100x.json vs 0.074 for the
+        // identical selection law without the resonance in
+        // SCALE_r12_clustered_ann_100x.json). The replica
         // id now enters the payload GEOMETRY: each row's spread is
         // scrambled by a PER-ROW orthogonal map (cyclic shift by
         // hash(vec_id) mod dim composed with per-(vec_id, j) sign

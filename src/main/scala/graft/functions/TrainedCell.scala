@@ -254,17 +254,17 @@ case class TwoLevelArgminH2Broadcast(
   * (measured in AnnClusteredStress on the clustered corpus).
   *
   * Returns the probe cells as array<bigint>: the home cell first,
-  * then qualifying cells ordered by (d2, cid) — the same total order
-  * as every argmin kernel, so the DuckDB twin is a windowed ranking
-  * with the identical integer margin predicate. Cells are distinct by
-  * construction (a child belongs to exactly one super; home is
-  * excluded from the qualifying scan). Cost: O(nSupers·√c·d)/row with
+  * then qualifying cells INTERLEAVED across supers — by rank within
+  * the super's (d2, cid) order, then by super rank — so the DuckDB
+  * twin is a windowed ranking with the identical integer margin
+  * predicate. Cells are distinct by construction (a child belongs to
+  * exactly one super; home is excluded from the qualifying scan). Cost: O(nSupers·√c·d)/row with
   * the margin bound as an early exit — the probe3 cost class. */
 case class TwoLevelProbesBroadcast(
     codebook: Broadcast[(Array[Long], Array[Array[Long]],
       Array[Array[Long]], Array[Array[Array[Long]]])],
     nSupers: Int, maxProbes: Int, epsNum: Long, epsDen: Long,
-    child: Expression, interleave: Boolean = false)
+    child: Expression)
     extends UnaryExpression {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -363,31 +363,24 @@ case class TwoLevelProbesBroadcast(
         k += 1
       }
     }
-    val extra =
-      if (!interleave)
-        // DISTANCE order: globally by (d2, cid) — classic multi-probe
-        perSuper.flatten.sorted.take(maxProbes - 1).map(_._2).toSeq
-      else {
-        // INTERLEAVED order: (rank-within-super, super-rank) — one
-        // probe per super before any super's second probe, maximizing
-        // the diversity that two-sided pair coverage feeds on (the
-        // probe3 fixed set {home, s1c2, s2c1} is this order's prefix)
-        val ranked = perSuper.map(_.sorted)
-        val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-        var js = 0
-        var have = true
-        while (have) {
-          have = false
-          var sk = 0
-          while (sk < nS) {
-            if (ranked(sk).length > js) { buf += ranked(sk)(js)._2; have = true }
-            sk += 1
-          }
-          js += 1
-        }
-        buf.take(maxProbes - 1).toSeq
+    // INTERLEAVED order: (rank-within-super, super-rank) — one probe
+    // per super before any super's second probe, maximizing the
+    // diversity that two-sided pair coverage feeds on (the probe3
+    // fixed set {home, s1c2, s2c1} is this order's prefix)
+    val ranked = perSuper.map(_.sorted)
+    val extra = scala.collection.mutable.ArrayBuffer.empty[Long]
+    var js = 0
+    var have = true
+    while (have) {
+      have = false
+      var sk = 0
+      while (sk < nS) {
+        if (ranked(sk).length > js) { extra += ranked(sk)(js)._2; have = true }
+        sk += 1
       }
-    new GenericArrayData((home +: extra).toArray)
+      js += 1
+    }
+    new GenericArrayData((home +: extra.take(maxProbes - 1)).toArray)
   }
 
   override def nullSafeEval(v: Any): Any = probesOf(v.asInstanceOf[ArrayData])

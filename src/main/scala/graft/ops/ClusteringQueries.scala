@@ -369,7 +369,7 @@ object ClusteringQueries {
         a.join(b, "cluster")
           .filter(col("vec_id_a") < col("vec_id_b"))
           .selectExpr("cluster", "vec_id_a", "vec_id_b",
-            "(graft_vec_dot(ea, eb) / sqrt(na2 * nb2)) AS cosine")
+            s"${SimilarityQueries.cosineExpr("ea", "eb", "na2", "nb2")} AS cosine")
           .filter(col("cosine") >= SemDupThreshold)
           .groupBy("vec_id_b")
           .agg(min("cluster").as("cluster"), min("vec_id_a").as("kept_id"),

@@ -58,6 +58,16 @@ object SimilarityQueries {
         "path declared beside it (q_dedup_embedding_lsh / q_ann_ivf).")
     corpus
   }
+
+  /** The corpus side of the two brute-force oracles: (vec_id,
+    * embedding, n2) behind [[guardBrute]]. */
+  private def bruteCorpus(s: SparkSession, d: String, query: String): DataFrame = {
+    GraftFunctions.register(s)
+    guardBrute(Tables.embeddingsParallel(s, d)
+      .selectExpr("vec_id", "embedding",
+        "graft_vec_dot(embedding, embedding) AS n2"), query)
+  }
+
   private val NPlanes = 6
   // Salted variant: split any LSH bucket larger than this many rows into
   // ceil(n/cap) salt shards. The cap is deliberately tiny so the fixture
@@ -280,14 +290,13 @@ object SimilarityQueries {
     * AnnClusteredStress forces the switch at scale), child seeds kept
     * as DataFrame blocks met in a SHUFFLE_HASH join. */
   private[graft] def trainedAdaptiveCells(s: SparkSession, d: String,
-      nSupers: Int, maxProbes: Int, epsNum: Long, epsDen: Long,
-      interleave: Boolean = false): DataFrame = {
+      nSupers: Int, maxProbes: Int, epsNum: Long, epsDen: Long): DataFrame = {
     val v = trainedVecs(s, d)
     val n = v.count()
     val (sc, ss) = trainedStrides(n)
     if (adaptiveCells(n) > maxDriverSeeds(s))
       return trainedAdaptiveCellsDistFrom(s, v, nSupers, maxProbes,
-        epsNum, epsDen, interleave)
+        epsNum, epsDen)
     val (childSeeds, superSeeds) = collectSeeds(v, n, sc, ss, "TRUE")
     val bc = s.sparkContext.broadcast(
       graft.functions.Codebook.group(childSeeds, superSeeds))
@@ -295,7 +304,7 @@ object SimilarityQueries {
     val fnP = s"graft_trained_probes_$tag"
     s.sessionState.functionRegistry.createOrReplaceTempFunction(fnP,
       exprs => graft.functions.TwoLevelProbesBroadcast(
-        bc, nSupers, maxProbes, epsNum, epsDen, exprs(0), interleave),
+        bc, nSupers, maxProbes, epsNum, epsDen, exprs(0)),
       "scala_udf")
     val out = graft.ScratchCache.scratch(
       v.selectExpr("vec_id", "embedding", "n2", s"$fnP(qv) AS probes")
@@ -331,14 +340,12 @@ object SimilarityQueries {
     * bit-equality against the broadcast kernel at the fixture, and
     * AnnClusteredStress gates it at every stress scale. */
   private[graft] def trainedAdaptiveCellsDist(s: SparkSession, d: String,
-      nSupers: Int, maxProbes: Int, epsNum: Long, epsDen: Long,
-      interleave: Boolean = false): DataFrame =
+      nSupers: Int, maxProbes: Int, epsNum: Long, epsDen: Long): DataFrame =
     trainedAdaptiveCellsDistFrom(s, trainedVecs(s, d), nSupers, maxProbes,
-      epsNum, epsDen, interleave)
+      epsNum, epsDen)
 
   private def trainedAdaptiveCellsDistFrom(s: SparkSession, v: DataFrame,
-      nSupers: Int, maxProbes: Int, epsNum: Long, epsDen: Long,
-      interleave: Boolean): DataFrame = {
+      nSupers: Int, maxProbes: Int, epsNum: Long, epsDen: Long): DataFrame = {
     val n = v.count()
     val (sc, ss) = trainedStrides(n)
     val superSeeds = v.filter(expr(s"vec_id % $ss = 0"))
@@ -389,11 +396,9 @@ object SimilarityQueries {
         min(when(col("c") =!= col("home"), col("d"))).over(wAll))
     val wJs = Window.partitionBy("vec_id", "srk")
       .orderBy(col("d"), col("c"))
-    val wRnp = Window.partitionBy("vec_id").orderBy(
-      (if (interleave) Seq(col("js"), col("srk"))
-      else Seq(col("d"), col("c"))): _*)
+    val wRnp = Window.partitionBy("vec_id").orderBy(col("js"), col("srk"))
     // margin bound with the broadcast kernel's overflow guard: a huge
-    // epsNum sentinel (ProbeTune's no-margin M = 10^6) means "no
+    // epsNum sentinel (the no-margin M = 10^6) means "no
     // margin", and h2 * epsNum would overflow Long — a hard
     // ArithmeticException under Spark's default ANSI mode, and route
     // divergence without it. maxH2 is precomputed driver-side; the
@@ -1227,17 +1232,16 @@ object SimilarityQueries {
        |  FROM l3aq q JOIN ebl3 e ON e.vec_id = q.vec_id)""".stripMargin
 
   /** Knob defaults of the ADAPTIVE multi-probe blocker — chosen from
-    * graft.ProbeTune's measured retention-vs-mass frontier on the 100×
-    * clustered corpus (r10): nSupers=3 / maxProbes=5 / eps=4 /
-    * interleave retains 0.210 of true cosine≥0.4 pairs at 4.04× the
-    * single-probe candidate mass, vs the fixed probe3 set's 0.151 at
-    * 2.64× — the best measured ≤4.1×-mass point. maxProbes IS the
-    * stated mass budget (probe side only fans out; measured mass runs
-    * ~20% under the cap); that sweep (the retired ProbeTune main, in
-    * git history) picks the knobs when a different retention/budget
-    * point is wanted, and it is also the honest record that the
-    * frontier slope is ~0.05 retention per 1×
-    * mass on this corpus — truth grows quadratically in cluster mass,
+    * the measured retention-vs-mass frontier on the 100× clustered
+    * corpus (r10): nSupers=3 / maxProbes=5 / eps=4, interleaved,
+    * retains 0.209 of true cosine≥0.4 pairs at 4.10× the single-probe
+    * candidate mass, vs the fixed probe3 set's 0.151 at 2.64× —
+    * SCALE_r10_clustered_ann_100x.json (`neardup_retention_adaptive_probe`
+    * / `adaptive_probe_mass_vs_single` vs `neardup_retention_multi_probe3`
+    * / `multi_probe3_mass_vs_single`). maxProbes IS the stated mass
+    * budget (probe side only fans out; measured mass runs ~20% under
+    * the cap). The frontier slope is ~0.05 retention per 1× mass on
+    * this corpus — truth grows quadratically in cluster mass,
     * so a pair-retention target like 0.30 needs ~6× mass, while the
     * REMOVAL decision (any one found partner suffices) measures 1.000
     * recall at every grid point. */
@@ -1280,23 +1284,184 @@ object SimilarityQueries {
        |  FROM tqual q JOIN eb e ON e.vec_id = q.vec_id)""".stripMargin
   }
 
+  // ---- SEARCH FINISHERS -------------------------------------------------
+  // Every embedding query ends in one of three final steps, and each has
+  // exactly ONE implementation per engine, the DuckDB twin producing the
+  // same SQL shape: the cosine top-K ([[cosineTopK]] /
+  // [[duckCosineTopK]]), the near-dup pair join ([[pairCandidates]] /
+  // [[duckPairs]], with the SemDeDup rollup on top) and the est_d2
+  // top-K ([[estTopK]] / [[duckEstTopK]], over one ADC estimate
+  // [[adcEst]] / [[duckAdcEst]]). A query body is its index builder or
+  // probe set plus one finisher call — Tez's runtime-library pattern,
+  // one operator per kind of data movement reused by every processor.
+
+  /** The family's one cosine expression, over precomputed squared
+    * norms: dot / sqrt(n2_a · n2_b), bit-identical to the oracle's
+    * [[duckCos]]. A zero-norm vector has no direction: `try_divide`
+    * makes its cosine NULL, as DuckDB's division by zero does, instead
+    * of the ANSI divide's DIVIDE_BY_ZERO error — so such a row ranks
+    * last in a top-K (NULLs sort last under `desc`) and never clears
+    * a pair threshold. */
+  private[graft] def cosineExpr(a: String, b: String, na: String,
+      nb: String): String =
+    s"try_divide(graft_vec_dot($a, $b), sqrt($na * $nb))"
+
+  /** One side of a finisher join: an index frame's (vec_id, embedding,
+    * n2) renamed to the side's columns, plus caller columns (`cell`,
+    * `explode(probes) AS cell`, …). */
+  private case class Side(id: String, emb: String, n2: String) {
+    def of(e: DataFrame, cols: String*): DataFrame =
+      e.selectExpr(Seq(s"vec_id AS $id", s"embedding AS $emb",
+        s"n2 AS $n2") ++ cols: _*)
+  }
+  private val Query = Side("query_id", "qe", "qn2")
+  private val Arrival = Side("arrival_id", "qe", "qn2")
+  private val Corpus = Side("neighbor_id", "ce", "cn2")
+  private val PairA = Side("vec_id_a", "ea", "na2")
+  private val PairB = Side("vec_id_b", "eb", "nb2")
+
+  /** Cosine top-K: probe rows `q` (id, qe, qn2, …) meet corpus rows `c`
+    * (neighbor_id, ce, cn2, …) on the `on` columns — no columns is the
+    * brute-force scan, the corpus crossJoined with the BROADCAST probe
+    * side — then each probe keeps its `k` best neighbors by (cosine
+    * desc, neighbor_id) with the `keep` columns. A `query_id` probe is
+    * itself a corpus row, so its self pair is dropped; an `arrival_id`
+    * probe meets a corpus it is not part of. `ordered = false` skips
+    * the final (id, rn) sort — the per-batch stream write appends. */
+  private def cosineTopK(q: DataFrame, c: DataFrame, on: Seq[String],
+      id: String, k: Int, keep: Seq[String],
+      ordered: Boolean = true): DataFrame = {
+    val joined = if (on.isEmpty) c.crossJoin(broadcast(q)) else q.join(c, on)
+    val cands =
+      if (id == Query.id) joined.filter(col(id) =!= col("neighbor_id"))
+      else joined
+    val w = Window.partitionBy(id)
+      .orderBy(col("cosine").desc, col("neighbor_id"))
+    val top = cands
+      .selectExpr(Seq(id, "neighbor_id") ++ keep :+
+        s"${cosineExpr("qe", "ce", "qn2", "cn2")} AS cosine": _*)
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= k)
+    if (ordered) top.orderBy(id, "rn") else top
+  }
+
+  /** [[cosineTopK]] within cells: `probes` (query_id, qe, qn2, cell)
+    * meet the home cells of index frame `e` (vec_id, embedding, n2,
+    * cell), top-3 per query. */
+  private def cellTopK(probes: DataFrame, e: DataFrame): DataFrame =
+    cosineTopK(probes, Corpus.of(e, "cell"), Seq("cell"), Query.id, 3,
+      Seq("cell"))
+
+  /** [[cellTopK]] with every row probing its home cell — the search of
+    * the trained, distributed, L3 and facade books alike. */
+  private def homeTopK(e: DataFrame): DataFrame = cellTopK(Query.of(e, "cell"), e)
+
+  /** DuckDB twin of [[cosineTopK]]: after the `ctes`, relations `q` and
+    * `c` (vec_id, embedding, n2, …) meet on the `on` predicate (empty:
+    * every pair), `where` filters the pairs, and `keep` are qualified
+    * columns (`q.cell`) output under their bare names. */
+  private def duckCosineTopK(ctes: String, q: String, c: String, on: String,
+      id: String, k: Int, keep: Seq[String], where: String = ""): String = {
+    val cond = (Seq(on).filter(_.nonEmpty) ++
+      (if (id == Query.id) Seq("q.vec_id <> c.vec_id") else Nil))
+      .mkString(" AND ")
+    s"""WITH $ctes
+       |SELECT $id, neighbor_id, ${keep.map(_.split('.').last + ", ").mkString}cosine, rn FROM (
+       |  SELECT q.vec_id AS $id, c.vec_id AS neighbor_id, ${keep.map(_ + ", ").mkString}
+       |    ${duckCos("q", "c")} AS cosine,
+       |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
+       |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
+       |  FROM $q q JOIN $c c ON $cond
+       |  ${if (where.isEmpty) "" else s"WHERE $where"}
+       |) WHERE rn <= $k ORDER BY $id, rn""".stripMargin
+  }
+
+  /** Near-dup candidate pairs: `a` (vec_id_a, ea, na2, …) meets `b`
+    * (vec_id_b, eb, nb2, …) on the `on` columns (none: every pair), and
+    * pairs with cosine ≥ [[NearDupThreshold]] survive. Without `fanOut`
+    * every row sits once on each side, so `vec_id_a < vec_id_b` yields
+    * each pair once. A fanned-out probe side (several cells per row)
+    * meets a pair from either endpoint, so pairs are canonicalized to
+    * (least, greatest) — symmetric bit-exact: the dot's fold order is
+    * the dimension order and float multiply commutes — and the caller
+    * drops the repeats. */
+  private def pairCandidates(a: DataFrame, b: DataFrame, on: Seq[String],
+      fanOut: Boolean): DataFrame = {
+    val joined = if (on.isEmpty) a.crossJoin(b) else a.join(b, on)
+    val (order, ids) =
+      if (fanOut) (col("vec_id_a") =!= col("vec_id_b"),
+        Seq("least(vec_id_a, vec_id_b) AS vec_id_a",
+          "greatest(vec_id_a, vec_id_b) AS vec_id_b"))
+      else (col("vec_id_a") < col("vec_id_b"), Seq("vec_id_a", "vec_id_b"))
+    joined.filter(order)
+      .selectExpr(ids :+ s"${cosineExpr("ea", "eb", "na2", "nb2")} AS cosine": _*)
+      .filter(col("cosine") >= NearDupThreshold)
+  }
+
+  /** The near-dup pair list: [[pairCandidates]], distinct where the
+    * probe side fans out, ordered by (vec_id_a, vec_id_b). */
+  private def nearDupPairs(a: DataFrame, b: DataFrame, on: Seq[String],
+      fanOut: Boolean): DataFrame = {
+    val p = pairCandidates(a, b, on, fanOut)
+    (if (fanOut) p.distinct() else p).orderBy("vec_id_a", "vec_id_b")
+  }
+
+  /** The SemDeDup REMOVAL DECISION over a fanned-out probe set `a`
+    * meeting index frame `e`'s home cells: each removed vec_id (the
+    * higher id of a near-dup pair) with its kept lowest-id duplicate and
+    * its duplicate count. */
+  private def semDedupRollup(a: DataFrame, e: DataFrame): DataFrame =
+    pairCandidates(a, PairB.of(e, "cell"), Seq("cell"), fanOut = true)
+      .select("vec_id_a", "vec_id_b").distinct()
+      .groupBy("vec_id_b")
+      .agg(min("vec_id_a").as("kept_id"), count(lit(1)).as("n_dups"))
+      .selectExpr("vec_id_b AS vec_id", "kept_id", "n_dups")
+      .orderBy("vec_id")
+
+  /** DuckDB twin of [[pairCandidates]] (+ the distinct of the fan-out
+    * case): relations `a` and `b` (vec_id, embedding, n2, …) meet on the
+    * `on` predicate (empty: every pair). */
+  private def duckPairs(a: String, b: String, on: String,
+      fanOut: Boolean): String = {
+    val (ids, order) =
+      if (fanOut) ("DISTINCT least(a.vec_id, b.vec_id) AS vec_id_a,\n" +
+        "  greatest(a.vec_id, b.vec_id) AS vec_id_b", "a.vec_id <> b.vec_id")
+      else ("a.vec_id AS vec_id_a, b.vec_id AS vec_id_b", "a.vec_id < b.vec_id")
+    s"""SELECT $ids,
+       |  ${duckCos("a", "b")} AS cosine
+       |FROM $a a JOIN $b b ON ${(Seq(on).filter(_.nonEmpty) :+ order).mkString(" AND ")}
+       |WHERE ${duckCos("a", "b")} >= $NearDupThreshold""".stripMargin
+  }
+
+  /** DuckDB twin of [[nearDupPairs]]. */
+  private def duckNearDupSql(ctes: String, a: String, b: String, on: String,
+      fanOut: Boolean): String =
+    s"""WITH $ctes
+       |${duckPairs(a, b, on, fanOut)}
+       |ORDER BY vec_id_a, vec_id_b""".stripMargin
+
+  /** DuckDB twin of [[semDedupRollup]]: probe relation `a` meets the
+    * home cells of `b`. */
+  private def duckSemDedupSql(ctes: String, a: String, b: String): String =
+    s"""WITH $ctes,
+       |dpairs AS (
+       |  ${duckPairs(a, b, "a.cell = b.cell", fanOut = true)})
+       |SELECT vec_id_b AS vec_id, min(vec_id_a) AS kept_id,
+       |  count(*) AS n_dups
+       |FROM dpairs GROUP BY vec_id_b ORDER BY vec_id""".stripMargin
+
   /** Probe-side fan-out of the multi-probe family — ONE place for the
-    * probe law (it appears in five declared queries): home cell always;
-    * cell2 (second-nearest super's best child) and, when `useCell3`,
-    * cell3 (home super's second-best child) with their degenerate
-    * fallback rows (cellX = cell) FILTERED so the fan-out stays
-    * pair-disjoint. Column aliases are caller-chosen (the dedup family
-    * speaks vec_id_a/ea/na2, the ANN family query_id/qe/qn2). */
-  private def probeUnion(e: DataFrame, idAs: String, embAs: String,
-      n2As: String, useCell3: Boolean): DataFrame = {
-    def sel(cellExpr: String) = Seq(s"vec_id AS $idAs",
-      s"embedding AS $embAs", s"n2 AS $n2As", s"$cellExpr AS cell")
-    val u = e.selectExpr(sel("cell"): _*)
-      .unionAll(e.filter(col("cell2") =!= col("cell"))
-        .selectExpr(sel("cell2"): _*))
+    * probe law: home cell always; cell2 (second-nearest super's best
+    * child) and, when `useCell3`, cell3 (home super's second-best child)
+    * with their degenerate fallback rows (cellX = cell) FILTERED so the
+    * fan-out stays pair-disjoint. `side` names the columns (the dedup
+    * family probes as [[PairA]], the search family as [[Query]]). */
+  private def probeUnion(e: DataFrame, side: Side,
+      useCell3: Boolean): DataFrame = {
+    val u = side.of(e, "cell AS cell")
+      .unionAll(side.of(e.filter(col("cell2") =!= col("cell")), "cell2 AS cell"))
     if (!useCell3) u
-    else u.unionAll(e.filter(col("cell3") =!= col("cell"))
-      .selectExpr(sel("cell3"): _*))
+    else u.unionAll(side.of(e.filter(col("cell3") =!= col("cell")), "cell3 AS cell"))
   }
 
   /** DuckDB twin of [[probeUnion]] over a `src(vec_id, embedding, n2,
@@ -1313,17 +1478,6 @@ object SimilarityQueries {
          |  SELECT vec_id, embedding, n2, cell3 AS cell FROM $src
          |  WHERE cell3 <> cell""".stripMargin
   }
-
-  /** The within-cell top-3 search shared by the trained-IVF family:
-    * one hash-partitioned self-join on cell + per-query top-3 window
-    * (cosine desc, neighbor_id asc). */
-  /** Conf override of the two-level cell cap the FACADE routes on —
-    * production never sets it (the law is [[CellCap]]); tests and the
-    * stress force the L3 arm with it, the [[MaxDriverSeedsKey]]
-    * pattern. */
-  private[graft] val AnnCellCapKey = "spark.graft.ann.cellCap"
-  private def annCellCap(s: SparkSession): Long =
-    s.conf.get(AnnCellCapKey, CellCap.toString).toLong
 
   /** The facade's route LAW — pure arithmetic, spec-testable without a
     * 2.1×10⁹-row corpus: the two-level book holds constant occupancy
@@ -1357,18 +1511,16 @@ object SimilarityQueries {
     * super's second child) has no L3 twin and is deliberately NOT in
     * the facade surface — callers needing it have chosen a book.
     * Downstream of the build, both books' frames join/serve
-    * identically (trainedAnnSearch, the KeyedTable ingest/delete
+    * identically ([[homeTopK]], the KeyedTable ingest/delete
     * surface). Driver state and join shape follow the routed book's
     * documented bounds.
     *
-    * `cap` overrides the two-level cell cap for THIS call only —
-    * forced-route tests/stress pass it explicitly so they no longer
-    * race on shared session conf (ADVICE r11: a concurrent caller of
-    * the facade would silently inherit a set-then-unset conf key).
-    * The conf key remains the DEFAULT source only. */
+    * `cap` overrides the two-level cell cap ([[CellCap]]) for THIS call
+    * only — forced-route tests/stress pass it explicitly, so no shared
+    * session conf is ever set and unset under a concurrent caller. */
   private[graft] def annIndex(s: SparkSession, d: String,
       probe2: Boolean = false, cap: Option[Long] = None): DataFrame = {
-    val book = annBook(corpusN(s, d), cap.getOrElse(annCellCap(s)))
+    val book = annBook(corpusN(s, d), cap.getOrElse(CellCap.toLong))
     val base =
       if (book == "l3") trainedCellsL3(s, d, probe2)
       else trainedCells(s, d, probe2)
@@ -1388,7 +1540,7 @@ object SimilarityQueries {
     * declared per-book queries. */
   private[graft] def annIndexInc(s: SparkSession, d: String,
       seedWhere: String, cap: Option[Long] = None): DataFrame = {
-    val book = annBook(corpusN(s, d), cap.getOrElse(annCellCap(s)))
+    val book = annBook(corpusN(s, d), cap.getOrElse(CellCap.toLong))
     val base =
       if (book == "l3") trainedCellsL3Inc(s, d, seedWhere)
       else trainedCells(s, d, seedWhere = seedWhere)
@@ -1397,25 +1549,70 @@ object SimilarityQueries {
   }
 
   /** The served-index INGEST probe shared by every incremental
-    * declared query — two-level, L3, and the facade arms: arrivals
-    * (vec_id % 10 = 0) probe ONLY existing rows through the frozen
-    * book's home cells, per-arrival top-3. One body so the per-book
-    * routes and the facade can never drift apart. */
-  private[graft] def servedIngestProbe(e: DataFrame): DataFrame = {
-    val q = e.filter(col("vec_id") % 10 === 0)
-      .selectExpr("vec_id AS arrival_id", "embedding AS qe",
-        "n2 AS qn2", "cell")
-    val c = e.filter(col("vec_id") % 10 =!= 0)
-      .selectExpr("vec_id AS neighbor_id", "embedding AS ce",
-        "n2 AS cn2", "cell")
-    val w = Window.partitionBy("arrival_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    q.join(c, Seq("cell"))
-      .selectExpr("arrival_id", "neighbor_id", "cell",
-        "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .orderBy("arrival_id", "rn")
+    * declared query — hash-seeded, two-level, L3, and the facade arms:
+    * arrivals (vec_id % 10 = 0) probe ONLY existing rows through the
+    * frozen book's home cells, per-arrival top-3. */
+  private[graft] def servedIngestProbe(e: DataFrame): DataFrame =
+    cosineTopK(Arrival.of(e.filter(col("vec_id") % 10 === 0), "cell"),
+      Corpus.of(e.filter(col("vec_id") % 10 =!= 0), "cell"), Seq("cell"),
+      Arrival.id, 3, Seq("cell"))
+
+  /** STREAMING ingest on a served index — the production write path of
+    * the clustered-corpus family under the oracle (TrainedWriteSpec
+    * proves the pruning mechanics; this proves the composed
+    * micro-batch SEMANTICS). `index` builds the book on the existing
+    * rows only (the served-index seedWhere contract); those rows are
+    * written PARTITIONED BY their cell, the arrival feed lands as an
+    * unbounded file stream (maxFilesPerTrigger=1 → 3 real triggers), and
+    * each micro-batch probes ONLY its arrivals' home cells — a
+    * partition-pruned read of the served table, per-batch cost ∝ batch
+    * size at any corpus size — appending its top-3 rows. Arrival
+    * batches are key-disjoint, so per-arrival top-3 completes within
+    * one batch and the appended union EQUALS [[servedIngestProbe]] over
+    * the same book. `sub` names the query's scratch subdirectory. */
+  private def streamIngest(s: SparkSession, d: String, sub: String,
+      index: => DataFrame): DataFrame = {
+    import org.apache.spark.sql.streaming.Trigger
+    val root = s"${graft.ProcScratch.base}/$sub/${new java.io.File(d).getName}"
+    val watch = s"$root/_arrivals"
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    val e = index
+    // the SERVED table: existing rows, one directory per cell
+    e.filter(col("vec_id") % 10 =!= 0)
+      .select("vec_id", "embedding", "n2", "cell")
+      .write.partitionBy("cell").parquet(s"$root/corpus")
+    // the arrival feed: 3 key-disjoint chunks (vec_id/10 mod 3)
+    val arrSchema = graft.sources.Sources.stageChunks(s,
+      e.filter(col("vec_id") % 10 === 0)
+        .select("vec_id", "embedding", "n2", "cell"),
+      expr("(vec_id div 10) % 3"), 3, s"$root/_arr_stage", watch, "arr")
+    // hoisted OUT of the trigger body (r13): the served table is
+    // immutable across triggers, so its directory listing + schema
+    // inference need to run once, not once per micro-batch; the
+    // per-batch cell filter below still partition-prunes this frame
+    val corpusBase = s.read.parquet(s"$root/corpus")
+      .withColumn("cell", col("cell").cast("long"))
+    val q = s.readStream.schema(arrSchema)
+      .option("maxFilesPerTrigger", "1").parquet(watch)
+      .writeStream
+      .option("checkpointLocation", s"$root/_checkpoint")
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        // bounded collect: the batch's distinct home cells — the
+        // partition-pruning predicate for the served-table scan
+        val cells = batch.select("cell").distinct()
+          .collect().map(_.getLong(0))
+        cosineTopK(Arrival.of(batch, "cell"),
+          Corpus.of(corpusBase.filter(col("cell").isin(cells: _*)), "cell"),
+          Seq("cell"), Arrival.id, 3, Seq("cell"), ordered = false)
+          .write.mode("append").parquet(s"$root/out")
+        ()
+      }
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    s.read.parquet(s"$root/out").orderBy("arrival_id", "rn")
   }
 
   /** The served-index DELETE body shared by q_ann_delete,
@@ -1441,20 +1638,7 @@ object SimilarityQueries {
     }
     graft.sources.KeyedTable.compact(s, root, "annidx", "vec_id", 100000L)
     val idx = graft.sources.KeyedTable.read(s, root, "annidx")
-    val q = idx.filter(col("vec_id") % 10 === 0)
-      .selectExpr("vec_id AS query_id", "embedding AS qe",
-        "n2 AS qn2", "cell")
-    val c = idx.selectExpr("vec_id AS neighbor_id", "embedding AS ce",
-      "n2 AS cn2", "cell")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    q.join(c, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .selectExpr("query_id", "neighbor_id", "cell",
-        "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .orderBy("query_id", "rn")
+    cellTopK(Query.of(idx.filter(col("vec_id") % 10 === 0), "cell"), idx)
   }
 
   /** FACADE-LEVEL INGEST (r12, the r11 verdict's item 4): the serving
@@ -1474,126 +1658,60 @@ object SimilarityQueries {
       cap: Option[Long] = None): DataFrame =
     servedDeleteProbe(s, root, annIndex(s, d, cap = cap))
 
-  private def trainedAnnSearch(e: DataFrame): DataFrame = {
-    val q = e.selectExpr("vec_id AS query_id", "embedding AS qe",
-      "n2 AS qn2", "cell")
-    val c = e.selectExpr("vec_id AS neighbor_id", "embedding AS ce",
-      "n2 AS cn2", "cell")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    q.join(c, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .selectExpr("query_id", "neighbor_id", "cell",
-        "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .orderBy("query_id", "rn")
-  }
+  /** Oracle of [[homeTopK]] over a routing CTE chain `ctes` whose
+    * relation `eb` holds (vec_id, embedding, n2, cell). */
+  private def duckHomeSql(ctes: String, eb: String): String =
+    duckCosineTopK(ctes, eb, eb, "q.cell = c.cell", "query_id", 3,
+      Seq("q.cell"))
 
-  /** Oracle of [[trainedAnnSearch]] over [[duckTrainedEbCte]] — shared
-    * by q_ann_ivf_trained and q_ann_ivf_trained_dist (the two builds
-    * assign IDENTICAL cells, so one SQL gates both). */
-  private def duckTrainedAnnSql: String =
-    s"""WITH $duckTrainedEbCte
-       |SELECT query_id, neighbor_id, cell, cosine, rn FROM (
-       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, q.cell,
-       |    ${duckCos("q", "c")} AS cosine,
-       |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-       |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
-       |  FROM eb q JOIN eb c ON q.cell = c.cell AND q.vec_id <> c.vec_id
-       |) WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin
+  /** Oracle of [[servedIngestProbe]] over the same shape: arrivals
+    * (vec_id % 10 = 0) probe only existing rows. */
+  private def duckIngestSql(ctes: String, eb: String): String =
+    duckCosineTopK(ctes, eb, eb, "q.cell = c.cell", "arrival_id", 3,
+      Seq("q.cell"), "q.vec_id % 10 = 0 AND c.vec_id % 10 <> 0")
 
-  /** The nprobe=3 top-3 search shared by the BROADCAST and DIST builds
-    * (q_ann_ivf_trained_probe3 / q_ann_ivf_trained_probe3_dist) — one
-    * body + one oracle so the two declared routes can never drift
-    * apart (their bit-equality is the dist query's whole point). */
-  private def trainedProbe3Search(e: DataFrame): DataFrame = {
-    val probes = probeUnion(e, "query_id", "qe", "qn2", useCell3 = true)
-    val c = e.selectExpr("vec_id AS neighbor_id", "embedding AS ce",
-      "n2 AS cn2", "cell")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    probes.join(c, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .selectExpr("query_id", "neighbor_id", "cell",
-        "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .orderBy("query_id", "rn")
-  }
+  /** The two-level trained book's search oracle — shared by
+    * q_ann_ivf_trained, q_ann_ivf_trained_dist and q_ann_index_auto
+    * (the builds assign IDENTICAL cells, so one SQL gates all three). */
+  private def duckTrainedAnnSql: String = duckHomeSql(duckTrainedEbCte, "eb")
 
-  private lazy val duckTrainedProbe3Sql: String =
-    s"""WITH $duckTrainedEb3Cte,
-       |tprobes AS (
-       |  ${duckProbes("eb3", useCell3 = true)})
-       |SELECT query_id, neighbor_id, cell, cosine, rn FROM (
-       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, q.cell,
-       |    ${duckCos("q", "c")} AS cosine,
-       |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-       |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
-       |  FROM tprobes q JOIN eb3 c ON q.cell = c.cell
-       |    AND q.vec_id <> c.vec_id
-       |) WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin
+  /** The three-level book's search oracle — shared by
+    * q_ann_ivf_trained_l3 and the facade's forced-L3 arm. */
+  private def duckTrainedL3AnnSql: String = duckHomeSql(duckTrainedL3Cte, "ebl3")
 
-  /** Oracle shared by q_ann_incremental_trained and q_stream_ann_ingest
-    * — the streaming ingest's appended union must EQUAL the one-shot
-    * batch probe (micro-batch composition is the claim under test). */
-  /** Oracle of the L3 incremental/serving family — frozen
-    * filtered-training book ([[duckTrainedL3CteW]]), arrivals probe
-    * existing rows only. Shared by q_ann_incremental_l3 and
-    * q_stream_ann_ingest_l3 (key-disjoint batches make the streamed
-    * union equal the one-shot query). */
-  private def duckIncrementalL3Sql: String =
-    s"""WITH ${duckTrainedL3CteW("vec_id % 10 <> 0")}
-       |SELECT arrival_id, neighbor_id, cell, cosine, rn FROM (
-       |  SELECT q.vec_id AS arrival_id, c.vec_id AS neighbor_id, q.cell,
-       |    ${duckCos("q", "c")} AS cosine,
-       |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-       |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
-       |  FROM ebl3 q JOIN ebl3 c ON q.cell = c.cell
-       |  WHERE q.vec_id % 10 = 0 AND c.vec_id % 10 <> 0
-       |) WHERE rn <= 3 ORDER BY arrival_id, rn""".stripMargin
+  /** Oracle of the nprobe=3 search shared by the BROADCAST and DIST
+    * builds (q_ann_ivf_trained_probe3 / _dist) — one oracle so the two
+    * declared routes can never drift apart (their bit-equality is the
+    * dist query's whole point). */
+  private def duckTrainedProbe3Sql: String =
+    duckCosineTopK(duckTrainedDprobes3Cte, "dprobes", "eb3",
+      "q.cell = c.cell", "query_id", 3, Seq("q.cell"))
 
+  /** [[duckTrainedEb3Cte]] plus its three-probe fan-out, `dprobes`. */
+  private def duckTrainedDprobes3Cte: String =
+    s"""$duckTrainedEb3Cte,
+       |dprobes AS (
+       |  ${duckProbes("eb3", useCell3 = true)})""".stripMargin
+
+  /** Oracles of the served-index INGEST family — frozen
+    * filtered-training book, arrivals probe existing rows only. The
+    * streaming ingests share them with their batch twins (key-disjoint
+    * batches make the streamed union equal the one-shot query). */
   private def duckIncrementalTrainedSql: String =
-    s"""WITH ${duckTrainedEbCteW("vec_id % 10 <> 0")}
-       |SELECT arrival_id, neighbor_id, cell, cosine, rn FROM (
-       |  SELECT q.vec_id AS arrival_id, c.vec_id AS neighbor_id, q.cell,
-       |    ${duckCos("q", "c")} AS cosine,
-       |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-       |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
-       |  FROM eb q JOIN eb c ON q.cell = c.cell
-       |  WHERE q.vec_id % 10 = 0 AND c.vec_id % 10 <> 0
-       |) WHERE rn <= 3 ORDER BY arrival_id, rn""".stripMargin
+    duckIngestSql(duckTrainedEbCteW("vec_id % 10 <> 0"), "eb")
+
+  private def duckIncrementalL3Sql: String =
+    duckIngestSql(duckTrainedL3CteW("vec_id % 10 <> 0"), "ebl3")
 
   /** Oracles of the served-index DELETE family — full-corpus book
     * (deletion never retrains), search restricted to the vec_id % 7
     * survivors. Shared by the per-book declared queries and the
     * facade arms (q_ann_delete/_auto on the two-level book;
     * q_ann_delete_l3/_auto_l3 on the three-level one). */
-  private def duckDeleteTrainedSql: String =
-    s"""WITH $duckTrainedEbCte
-       |SELECT query_id, neighbor_id, cell, cosine, rn FROM (
-       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, q.cell,
-       |    ${duckCos("q", "c")} AS cosine,
-       |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-       |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
-       |  FROM eb q JOIN eb c ON q.cell = c.cell AND q.vec_id <> c.vec_id
-       |  WHERE q.vec_id % 10 = 0 AND q.vec_id % 7 <> 0
-       |    AND c.vec_id % 7 <> 0
-       |) WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin
-
-  private def duckDeleteL3Sql: String =
-    s"""WITH $duckTrainedL3Cte
-       |SELECT query_id, neighbor_id, cell, cosine, rn FROM (
-       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, q.cell,
-       |    ${duckCos("q", "c")} AS cosine,
-       |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-       |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
-       |  FROM ebl3 q JOIN ebl3 c ON q.cell = c.cell
-       |    AND q.vec_id <> c.vec_id
-       |  WHERE q.vec_id % 10 = 0 AND q.vec_id % 7 <> 0
-       |    AND c.vec_id % 7 <> 0
-       |) WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin
+  private def duckDeleteSql(ctes: String, eb: String): String =
+    duckCosineTopK(ctes, eb, eb, "q.cell = c.cell", "query_id", 3,
+      Seq("q.cell"),
+      "q.vec_id % 10 = 0 AND q.vec_id % 7 <> 0 AND c.vec_id % 7 <> 0")
 
   /** The same knobs as inline DuckDB SQL over the embeddings view —
     * pure integer arithmetic, so both engines agree at every N. */
@@ -1641,6 +1759,20 @@ object SimilarityQueries {
           s"(${d.elemAtDbl(emb, "dd")} - 0.5 * ($cS + $cD))"),
       "acc", "v", "acc + v")
     d.transform(d.seqIncl("0", "(m - 1)"), "jj", dist)
+  }
+
+  /** Embeddings with their HASH-seeded two-level IVF cell (the native
+    * graft_ivf_cell_h kernel, bit-identical to [[duckTwoLevelEbCte]]),
+    * scratch-cached so a self-join does not assign cells twice —
+    * (vec_id, embedding, n2, cell) for q_ann_ivf / q_ann_incremental. */
+  private def hashCells(s: SparkSession, d: String): DataFrame = {
+    GraftFunctions.register(s)
+    graft.functions.TextHashFunctions.register(s)
+    val (sc, mc) = superSplit(adaptiveCells(corpusN(s, d)))
+    ScratchCache.scratch(Tables.embeddingsParallel(s, d)
+      .selectExpr("vec_id", "embedding",
+        "graft_vec_dot(embedding, embedding) AS n2",
+        s"CAST(graft_ivf_cell_h(embedding, $sc, $mc) AS INT) AS cell"))
   }
 
   /** DuckDB CTE chain ending in `eb(vec_id, embedding, n2, cell)` —
@@ -1973,19 +2105,18 @@ object SimilarityQueries {
     * changes WHICH pairs meet (every corpus row lands in exactly one salt
     * shard and every query probes all shards), so both queries must
     * reproduce this same bucket join bit-for-bit. */
-  private lazy val lshOracle: String = {
+  private lazy val lshOracle: String =
+    duckCosineTopK(duckLshEbCte, "eb", "eb", "q.bucket = c.bucket",
+      "query_id", 3, Seq("q.bucket"))
+
+  /** DuckDB twin of [[lshBucketed]] at the adaptive plane count — ends
+    * in `eb(vec_id, embedding, n2, bucket)`. */
+  private lazy val duckLshEbCte: String = {
     val d = DuckSql
-    s"""WITH eb AS (SELECT vec_id, embedding,
+    s"""eb AS (SELECT vec_id, embedding,
        |    ${d.dotDbl("embedding", "embedding")} AS n2,
        |    CAST(${lshBucket(d, "embedding", duckPlanesExpr)} AS BIGINT) AS bucket
-       |  FROM embeddings)
-       |SELECT query_id, neighbor_id, bucket, cosine, rn FROM (
-       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, q.bucket,
-       |    ${duckCos("q", "c")} AS cosine,
-       |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-       |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
-       |  FROM eb q JOIN eb c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
-       |) WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin
+       |  FROM embeddings)""".stripMargin
   }
 
   /** Query subset for the PQ queries (matches the ANN family). */
@@ -2185,9 +2316,7 @@ object SimilarityQueries {
   }
 
   private lazy val pqOracleCtes: String =
-    s"""v AS (
-       |  SELECT vec_id, ${DuckSql.quantVec("embedding", 1000000L)} AS v
-       |  FROM embeddings),
+    s"""$duckQuantV,
        |$pqOracleTail""".stripMargin
 
   /** The PRODUCTION-SHAPED PQ geometry (r10): k = 256 codes per
@@ -2294,7 +2423,7 @@ object SimilarityQueries {
     * vectors) and q_ann_ivfpq_res256 (residuals wrt the trained coarse
     * seed), and measured head-to-head in AnnClusteredStress. Returns
     * (query_id, vec_id, est_d2) for the PqQueries sampled queries;
-    * [[pq256TopK]] adds the declared queries' top-K window. */
+    * [[estTopK]] adds the declared queries' top-K window. */
   /** Optional multi-probe query side: (query_id, qcell) one row per
     * probed cell — [[pq256Est]]'s default is the home-cell frame
     * (nprobe=1); q_ann_ivfpq_adaptive passes the margin-law probe
@@ -2379,16 +2508,8 @@ object SimilarityQueries {
     val codes = v.selectExpr(("vec_id" +: "cell" +: codeCols): _*)
       .select(col("vec_id"), col("cell"),
         expr(s"stack($PqSubSpaces, $stackArgs)").as(Seq("ss", "code")))
-    val qcells = qprobes.getOrElse(
-      v.filter(col("vec_id") < PqQueries)
-        .selectExpr("vec_id AS query_id", "cell AS qcell"))
-    val qdist = pqQdist(s, v, book).join(qcells, "query_id")
-    val est = codes.join(broadcast(qdist),
-        codes("ss") === qdist("ss") && codes("code") === qdist("cid") &&
-          codes("cell") === qdist("qcell"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .groupBy("query_id", "vec_id")
-      .agg(sum("qd2").as("est_d2"))
+    val est = adcEst(codes, pqQdist(s, v, book),
+      Some(qprobes.getOrElse(homeCells(v))))
     (seedFns ++ fns).foreach(f =>
       s.sessionState.functionRegistry.dropFunction(
         org.apache.spark.sql.catalyst.FunctionIdentifier(f)))
@@ -2426,9 +2547,7 @@ object SimilarityQueries {
   }
 
   private[graft] def sq8Est(s: SparkSession, d: String): DataFrame =
-    sq8EstFrom(s, ScratchCache.scratch(trainedCells(s, d)
-      .selectExpr("vec_id",
-        s"${SparkSql.quantVec("embedding", 1000000L)} AS v", "cell")))
+    sq8EstFrom(s, ScratchCache.scratch(quantCells(trainedCells(s, d))))
 
   /** DuckDB twin of [[sq8EstFrom]] over the trained cells — ends in
     * `est(query_id, vec_id, est_d2)` with `v(vec_id, v)` in scope, the
@@ -2436,9 +2555,7 @@ object SimilarityQueries {
   private lazy val duckSq8EstCtes: String = {
     val d = DuckSql
     s"""$duckTrainedEbCte,
-       |v AS (
-       |  SELECT vec_id, ${d.quantVec("embedding", 1000000L)} AS v
-       |  FROM embeddings),
+       |$duckQuantV,
        |sqst AS MATERIALIZED (
        |  SELECT t.dd, min(vv.v[t.dd]) AS mn, max(vv.v[t.dd]) AS mx
        |  FROM v vv CROSS JOIN generate_series(1, 64) t(dd)
@@ -2508,9 +2625,43 @@ object SimilarityQueries {
        |) WHERE rn <= $TopK
        |ORDER BY query_id, rn""".stripMargin
 
-  /** Declared-query tail of the 256-code family: per-query top-K by
-    * (est_d2, neighbor_id). */
-  private def pq256TopK(est: DataFrame): DataFrame = {
+  /** The PqQueries sampled queries' home cells (query_id, qcell) —
+    * the nprobe=1 probe set of every cell-routed ADC query. */
+  private def homeCells(v: DataFrame): DataFrame =
+    v.filter(col("vec_id") < PqQueries)
+      .selectExpr("vec_id AS query_id", "cell AS qcell")
+
+  /** The ONE ADC estimate: each code row (vec_id, cell, ss, code) meets
+    * its query's lookup row (query_id, ss, cid, qd2) — the table rides
+    * a broadcast — and est_d2 sums the 4 looked-up subspace distances
+    * per (query_id, vec_id). `qcells` (query_id, qcell) restricts each
+    * query to its probe cells; None scores the whole corpus (flat PQ).
+    * A candidate lives in one cell and a query's probe cells are
+    * distinct, so the sum stays (query, candidate)-unique at any
+    * nprobe. */
+  private def adcEst(codes: DataFrame, qdist0: DataFrame,
+      qcells: Option[DataFrame]): DataFrame = {
+    val qdist = qcells.fold(qdist0)(qdist0.join(_, "query_id"))
+    val key = codes("ss") === qdist("ss") && codes("code") === qdist("cid")
+    codes.join(broadcast(qdist),
+        if (qcells.isEmpty) key else key && codes("cell") === qdist("qcell"))
+      .filter(col("query_id") =!= col("vec_id"))
+      .groupBy("query_id", "vec_id")
+      .agg(sum("qd2").as("est_d2"))
+  }
+
+  /** The 16-code ADC estimate over a (vec_id, v, cell[, cell2]) frame:
+    * [[pqLearnBook]]'s one-Lloyd-round codebook, [[pqCodes]]'
+    * map-side encode and [[pqQdist]]'s lookup table into [[adcEst]]. */
+  private def pq16Est(s: SparkSession, v: DataFrame,
+      qcells: Option[DataFrame]): DataFrame = {
+    val book = pqLearnBook(v)
+    adcEst(pqCodes(v, book), pqQdist(s, v, book), qcells)
+  }
+
+  /** The est_d2 top-K finisher of every PQ and SQ8 query: per-query
+    * top-K by (est_d2, neighbor_id). */
+  private def estTopK(est: DataFrame): DataFrame = {
     val w = Window.partitionBy("query_id")
       .orderBy(col("est_d2").asc, col("vec_id").asc)
     est.withColumn("rn", row_number().over(w))
@@ -2519,30 +2670,65 @@ object SimilarityQueries {
       .orderBy("query_id", "rn")
   }
 
+  /** DuckDB twin of [[adcEst]] — the `est(query_id, vec_id, est_d2)`
+    * CTE over `codes` and `qd`; `cellJoin` restricts candidates to the
+    * query's probe cells ([[duckSameCell]], or a probe relation), empty
+    * scores the whole corpus. */
+  private def duckAdcEst(cellJoin: String): String =
+    s"""est AS (
+       |  SELECT q.query_id, k.vec_id, CAST(sum(q.qd2) AS BIGINT) AS est_d2
+       |  FROM codes k
+       |  JOIN qd q ON q.ss = k.ss AND q.cid = k.code
+       |  $cellJoin
+       |  WHERE q.query_id <> k.vec_id
+       |  GROUP BY q.query_id, k.vec_id)""".stripMargin
+
+  /** [[duckAdcEst]]'s nprobe=1 restriction: candidate and query share
+    * their cell in relation `cells(vec_id, cell)`. */
+  private def duckSameCell(cells: String): String =
+    s"""JOIN $cells ck ON ck.vec_id = k.vec_id
+       |  JOIN $cells cq ON cq.vec_id = q.query_id AND cq.cell = ck.cell""".stripMargin
+
+  /** DuckDB twin of [[estTopK]] — appended after a WITH-prefix whose
+    * last CTE is `est(query_id, vec_id, est_d2)`. */
+  private def duckEstTopK(prefix: String): String =
+    s"""WITH $prefix
+       |SELECT query_id, neighbor_id, est_d2, rn FROM (
+       |  SELECT query_id, vec_id AS neighbor_id, est_d2,
+       |    ROW_NUMBER() OVER (PARTITION BY query_id
+       |      ORDER BY est_d2, vec_id) AS rn
+       |  FROM est) WHERE rn <= $TopK
+       |ORDER BY query_id, rn""".stripMargin
+
+  /** Quantized vectors over an index frame — the (vec_id, v, cell)
+    * input of the cell-routed ADC/SQ8 estimators. */
+  private def quantCells(e: DataFrame): DataFrame =
+    e.selectExpr("vec_id", s"${SparkSql.quantVec("embedding", 1000000L)} AS v",
+      "cell")
+
+  /** The 256-code ADC oracle prefix over a routing CTE chain `cells`
+    * ending in relation `eb(vec_id, …, cell)`: quantized vectors, the
+    * bounded-sample codebook tail, the same-cell estimate. */
+  private def duckPq256Ctes(cells: String, eb: String): String =
+    s"""$cells,
+       |$duckQuantV,
+       |$pqOracleTail256,
+       |${duckAdcEst(duckSameCell(eb))}""".stripMargin
+
+  /** DuckDB twin of the quantized vectors: the `v(vec_id, v)` CTE. */
+  private lazy val duckQuantV: String =
+    s"""v AS (
+       |  SELECT vec_id, ${DuckSql.quantVec("embedding", 1000000L)} AS v
+       |  FROM embeddings)""".stripMargin
+
   val defs: Map[String, QueryDef] = Map(
     // Brute-force cosine near-duplicate pairs.
     "q_dedup_embedding" -> QueryDef(
       (s, d) => {
-        GraftFunctions.register(s)
-        val e = guardBrute(Tables.embeddingsParallel(s, d)
-          .selectExpr("vec_id", "embedding",
-            "graft_vec_dot(embedding, embedding) AS n2"),
-          "q_dedup_embedding")
-        val a = e.selectExpr("vec_id AS vec_id_a", "embedding AS ea", "n2 AS na2")
-        val b = e.selectExpr("vec_id AS vec_id_b", "embedding AS eb", "n2 AS nb2")
-        a.crossJoin(b)
-          .filter(col("vec_id_a") < col("vec_id_b"))
-          .selectExpr("vec_id_a", "vec_id_b",
-            "(graft_vec_dot(ea, eb) / sqrt(na2 * nb2)) AS cosine")
-          .filter(col("cosine") >= NearDupThreshold)
-          .orderBy("vec_id_a", "vec_id_b")
+        val e = bruteCorpus(s, d, "q_dedup_embedding")
+        nearDupPairs(PairA.of(e), PairB.of(e), Nil, fanOut = false)
       },
-      s"""WITH $duckNormCte
-         |SELECT a.vec_id AS vec_id_a, b.vec_id AS vec_id_b,
-         |  ${duckCos("a", "b")} AS cosine
-         |FROM e a JOIN e b ON a.vec_id < b.vec_id
-         |WHERE ${duckCos("a", "b")} >= $NearDupThreshold
-         |ORDER BY vec_id_a, vec_id_b""".stripMargin),
+      duckNearDupSql(duckNormCte, "e", "e", "", fanOut = false)),
 
     // Bucketed near-dup pairs — the scale path for q_dedup_embedding's
     // declared-weak all-pairs crossJoin. Multi-probe hyperplane LSH:
@@ -2566,29 +2752,12 @@ object SimilarityQueries {
         val flips = (0 until np)
           .map(p => s"CAST(${graft.oracle.SparkSql.xorB("bucket", (1L << p).toString)} AS BIGINT)")
           .mkString(", ")
-        val probes = e.selectExpr("vec_id AS vec_id_a", "embedding AS ea",
-            "n2 AS na2", s"explode(array(bucket, $flips)) AS bucket")
-        val corpus = e.selectExpr("vec_id AS vec_id_b", "embedding AS eb",
-          "n2 AS nb2", "bucket")
-        probes.join(corpus, Seq("bucket"))
-          .filter(col("vec_id_a") < col("vec_id_b"))
-          .selectExpr("vec_id_a", "vec_id_b",
-            "(graft_vec_dot(ea, eb) / sqrt(na2 * nb2)) AS cosine")
-          .filter(col("cosine") >= NearDupThreshold)
-          .orderBy("vec_id_a", "vec_id_b")
-      }, {
-        val d = DuckSql
-        s"""WITH eb AS (SELECT vec_id, embedding,
-           |    ${d.dotDbl("embedding", "embedding")} AS n2,
-           |    CAST(${lshBucket(d, "embedding", duckPlanesExpr)} AS BIGINT) AS bucket
-           |  FROM embeddings)
-           |SELECT a.vec_id AS vec_id_a, b.vec_id AS vec_id_b,
-           |  ${duckCos("a", "b")} AS cosine
-           |FROM eb a JOIN eb b ON a.vec_id < b.vec_id
-           |  AND bit_count(${d.xorB("a.bucket", "b.bucket")}) <= 1
-           |WHERE ${duckCos("a", "b")} >= $NearDupThreshold
-           |ORDER BY vec_id_a, vec_id_b""".stripMargin
-      }),
+        nearDupPairs(PairA.of(e, s"explode(array(bucket, $flips)) AS bucket"),
+          PairB.of(e, "bucket"), Seq("bucket"), fanOut = false)
+      },
+      duckNearDupSql(duckLshEbCte, "eb", "eb",
+        s"bit_count(${DuckSql.xorB("a.bucket", "b.bucket")}) <= 1",
+        fanOut = false)),
 
     // MULTI-PROBE near-dup blocking on the TRAINED cells — the r08
     // stress's honest bad news was that EVERY bounded blocker's
@@ -2608,32 +2777,14 @@ object SimilarityQueries {
     "q_dedup_embedding_probe2" -> QueryDef(
       (s, d) => {
         val e = trainedCells(s, d, probe2 = true)
-        val probes = probeUnion(e, "vec_id_a", "ea", "na2", useCell3 = false)
-        val corpus = e.selectExpr("vec_id AS vec_id_b", "embedding AS eb",
-          "n2 AS nb2", "cell")
-        probes.join(corpus, Seq("cell"))
-          .filter(col("vec_id_a") =!= col("vec_id_b"))
-          .selectExpr(
-            "least(vec_id_a, vec_id_b) AS vec_id_a",
-            "greatest(vec_id_a, vec_id_b) AS vec_id_b",
-            // symmetric bit-exact: dot's fold order is the dimension
-            // order and float multiply commutes, so either endpoint
-            // ordering yields the identical double
-            "(graft_vec_dot(ea, eb) / sqrt(na2 * nb2)) AS cosine")
-          .filter(col("cosine") >= NearDupThreshold)
-          .distinct()
-          .orderBy("vec_id_a", "vec_id_b")
+        nearDupPairs(probeUnion(e, PairA, useCell3 = false),
+          PairB.of(e, "cell"), Seq("cell"), fanOut = true)
       },
-      s"""WITH $duckTrainedEb2Cte,
-         |dprobes AS (
-         |  ${duckProbes("eb2", useCell3 = false)})
-         |SELECT DISTINCT least(a.vec_id, b.vec_id) AS vec_id_a,
-         |  greatest(a.vec_id, b.vec_id) AS vec_id_b,
-         |  ${duckCos("a", "b")} AS cosine
-         |FROM dprobes a JOIN eb2 b ON a.cell = b.cell
-         |  AND a.vec_id <> b.vec_id
-         |WHERE ${duckCos("a", "b")} >= $NearDupThreshold
-         |ORDER BY vec_id_a, vec_id_b""".stripMargin),
+      duckNearDupSql(
+        s"""$duckTrainedEb2Cte,
+           |dprobes AS (
+           |  ${duckProbes("eb2", useCell3 = false)})""".stripMargin,
+        "dprobes", "eb2", "a.cell = b.cell", fanOut = true)),
 
     // THREE-probe near-dup blocking: probe2's cross-super probe PLUS
     // the home super's second-best child (cell3) — the INTRA-super
@@ -2646,29 +2797,11 @@ object SimilarityQueries {
     "q_dedup_embedding_probe3" -> QueryDef(
       (s, d) => {
         val e = trainedCells(s, d, probe2 = true, probe3 = true)
-        val probes = probeUnion(e, "vec_id_a", "ea", "na2", useCell3 = true)
-        val corpus = e.selectExpr("vec_id AS vec_id_b", "embedding AS eb",
-          "n2 AS nb2", "cell")
-        probes.join(corpus, Seq("cell"))
-          .filter(col("vec_id_a") =!= col("vec_id_b"))
-          .selectExpr(
-            "least(vec_id_a, vec_id_b) AS vec_id_a",
-            "greatest(vec_id_a, vec_id_b) AS vec_id_b",
-            "(graft_vec_dot(ea, eb) / sqrt(na2 * nb2)) AS cosine")
-          .filter(col("cosine") >= NearDupThreshold)
-          .distinct()
-          .orderBy("vec_id_a", "vec_id_b")
+        nearDupPairs(probeUnion(e, PairA, useCell3 = true),
+          PairB.of(e, "cell"), Seq("cell"), fanOut = true)
       },
-      s"""WITH $duckTrainedEb3Cte,
-         |dprobes AS (
-         |  ${duckProbes("eb3", useCell3 = true)})
-         |SELECT DISTINCT least(a.vec_id, b.vec_id) AS vec_id_a,
-         |  greatest(a.vec_id, b.vec_id) AS vec_id_b,
-         |  ${duckCos("a", "b")} AS cosine
-         |FROM dprobes a JOIN eb3 b ON a.cell = b.cell
-         |  AND a.vec_id <> b.vec_id
-         |WHERE ${duckCos("a", "b")} >= $NearDupThreshold
-         |ORDER BY vec_id_a, vec_id_b""".stripMargin),
+      duckNearDupSql(duckTrainedDprobes3Cte, "dprobes", "eb3",
+        "a.cell = b.cell", fanOut = true)),
 
     // ADAPTIVE multi-probe near-dup blocking — the TARGET-RETENTION
     // KNOB (r09 verdict item 3): instead of a fixed probe set, each
@@ -2676,9 +2809,9 @@ object SimilarityQueries {
     // integer distance margin of its nearest alternative, interleaved
     // one-per-super and capped at maxProbes = THE stated mass budget
     // (graft.functions.TwoLevelProbesBroadcast). Knob defaults are
-    // CHOSEN from graft.ProbeTune's measured frontier on the 100×
-    // clustered corpus: retention 0.210 at 4.04× single-probe mass vs
-    // probe3's 0.151 at 2.64× (AnnClusteredStress gates the adaptive
+    // CHOSEN from the measured frontier on the 100× clustered corpus
+    // (SCALE_r10_clustered_ann_100x.json): retention 0.209 at 4.10×
+    // single-probe mass vs probe3's 0.151 at 2.64× (AnnClusteredStress gates the adaptive
     // row at a raised 0.15 floor, and gates removal recall — the
     // actual dedup decision metric — at 0.95; measured 1.000). The
     // frontier itself (~0.05 retention per 1× mass; removal recall
@@ -2688,29 +2821,12 @@ object SimilarityQueries {
     "q_dedup_embedding_adaptive" -> QueryDef(
       (s, d) => {
         val e = trainedAdaptiveCells(s, d, AdaptNSupers, AdaptMaxProbes,
-          AdaptEpsNum, AdaptEpsDen, interleave = true)
-        val probes = e.selectExpr("vec_id AS vec_id_a", "embedding AS ea",
-          "n2 AS na2", "explode(probes) AS cell")
-        val corpus = e.selectExpr("vec_id AS vec_id_b", "embedding AS eb",
-          "n2 AS nb2", "cell")
-        probes.join(corpus, Seq("cell"))
-          .filter(col("vec_id_a") =!= col("vec_id_b"))
-          .selectExpr(
-            "least(vec_id_a, vec_id_b) AS vec_id_a",
-            "greatest(vec_id_a, vec_id_b) AS vec_id_b",
-            "(graft_vec_dot(ea, eb) / sqrt(na2 * nb2)) AS cosine")
-          .filter(col("cosine") >= NearDupThreshold)
-          .distinct()
-          .orderBy("vec_id_a", "vec_id_b")
+          AdaptEpsNum, AdaptEpsDen)
+        nearDupPairs(PairA.of(e, "explode(probes) AS cell"),
+          PairB.of(e, "cell"), Seq("cell"), fanOut = true)
       },
-      s"""WITH $duckAdaptiveProbesCte
-         |SELECT DISTINCT least(a.vec_id, b.vec_id) AS vec_id_a,
-         |  greatest(a.vec_id, b.vec_id) AS vec_id_b,
-         |  ${duckCos("a", "b")} AS cosine
-         |FROM aprobes a JOIN eb b ON a.cell = b.cell
-         |  AND a.vec_id <> b.vec_id
-         |WHERE ${duckCos("a", "b")} >= $NearDupThreshold
-         |ORDER BY vec_id_a, vec_id_b""".stripMargin),
+      duckNearDupSql(duckAdaptiveProbesCte, "aprobes", "eb",
+        "a.cell = b.cell", fanOut = true)),
 
     // The SemDeDup REMOVAL DECISION riding the adaptive knob — the
     // engine's recommended semantic-dedup pass when retention (not
@@ -2724,34 +2840,10 @@ object SimilarityQueries {
     "q_dedup_semantic_adaptive" -> QueryDef(
       (s, d) => {
         val e = trainedAdaptiveCells(s, d, AdaptNSupers, AdaptMaxProbes,
-          AdaptEpsNum, AdaptEpsDen, interleave = true)
-        val probes = e.selectExpr("vec_id AS vec_id_a", "embedding AS ea",
-          "n2 AS na2", "explode(probes) AS cell")
-        val corpus = e.selectExpr("vec_id AS vec_id_b", "embedding AS eb",
-          "n2 AS nb2", "cell")
-        probes.join(corpus, Seq("cell"))
-          .filter(col("vec_id_a") =!= col("vec_id_b"))
-          .selectExpr(
-            "least(vec_id_a, vec_id_b) AS vec_id_a",
-            "greatest(vec_id_a, vec_id_b) AS vec_id_b",
-            "(graft_vec_dot(ea, eb) / sqrt(na2 * nb2)) AS cosine")
-          .filter(col("cosine") >= NearDupThreshold)
-          .select("vec_id_a", "vec_id_b").distinct()
-          .groupBy("vec_id_b")
-          .agg(min("vec_id_a").as("kept_id"), count(lit(1)).as("n_dups"))
-          .selectExpr("vec_id_b AS vec_id", "kept_id", "n_dups")
-          .orderBy("vec_id")
+          AdaptEpsNum, AdaptEpsDen)
+        semDedupRollup(PairA.of(e, "explode(probes) AS cell"), e)
       },
-      s"""WITH $duckAdaptiveProbesCte,
-         |dpairs AS (
-         |  SELECT DISTINCT least(a.vec_id, b.vec_id) AS vec_id_a,
-         |    greatest(a.vec_id, b.vec_id) AS vec_id_b
-         |  FROM aprobes a JOIN eb b ON a.cell = b.cell
-         |    AND a.vec_id <> b.vec_id
-         |  WHERE ${duckCos("a", "b")} >= $NearDupThreshold)
-         |SELECT vec_id_b AS vec_id, min(vec_id_a) AS kept_id,
-         |  count(*) AS n_dups
-         |FROM dpairs GROUP BY vec_id_b ORDER BY vec_id""".stripMargin),
+      duckSemDedupSql(duckAdaptiveProbesCte, "aprobes", "eb")),
 
     // SemDeDup REMOVAL DECISION on the multi-probe trained blocking —
     // the engine's recommended semantic-dedup pass for clustered
@@ -2767,65 +2859,19 @@ object SimilarityQueries {
     "q_dedup_semantic_mp" -> QueryDef(
       (s, d) => {
         val e = trainedCells(s, d, probe2 = true, probe3 = true)
-        val probes = probeUnion(e, "vec_id_a", "ea", "na2", useCell3 = true)
-        val corpus = e.selectExpr("vec_id AS vec_id_b", "embedding AS eb",
-          "n2 AS nb2", "cell")
-        probes.join(corpus, Seq("cell"))
-          .filter(col("vec_id_a") =!= col("vec_id_b"))
-          .selectExpr(
-            "least(vec_id_a, vec_id_b) AS vec_id_a",
-            "greatest(vec_id_a, vec_id_b) AS vec_id_b",
-            "(graft_vec_dot(ea, eb) / sqrt(na2 * nb2)) AS cosine")
-          .filter(col("cosine") >= NearDupThreshold)
-          .select("vec_id_a", "vec_id_b").distinct()
-          .groupBy("vec_id_b")
-          .agg(min("vec_id_a").as("kept_id"), count(lit(1)).as("n_dups"))
-          .selectExpr("vec_id_b AS vec_id", "kept_id", "n_dups")
-          .orderBy("vec_id")
+        semDedupRollup(probeUnion(e, PairA, useCell3 = true), e)
       },
-      s"""WITH $duckTrainedEb3Cte,
-         |dprobes AS (
-         |  ${duckProbes("eb3", useCell3 = true)}),
-         |dpairs AS (
-         |  SELECT DISTINCT least(a.vec_id, b.vec_id) AS vec_id_a,
-         |    greatest(a.vec_id, b.vec_id) AS vec_id_b
-         |  FROM dprobes a JOIN eb3 b ON a.cell = b.cell
-         |    AND a.vec_id <> b.vec_id
-         |  WHERE ${duckCos("a", "b")} >= $NearDupThreshold)
-         |SELECT vec_id_b AS vec_id, min(vec_id_a) AS kept_id,
-         |  count(*) AS n_dups
-         |FROM dpairs GROUP BY vec_id_b ORDER BY vec_id""".stripMargin),
+      duckSemDedupSql(duckTrainedDprobes3Cte, "dprobes", "eb3")),
 
     // Exact brute-force top-k: query side broadcast, corpus scanned once.
     "q_ann_cosine" -> QueryDef(
       (s, d) => {
-        GraftFunctions.register(s)
-        val e = guardBrute(Tables.embeddingsParallel(s, d)
-          .selectExpr("vec_id", "embedding",
-            "graft_vec_dot(embedding, embedding) AS n2"),
-          "q_ann_cosine")
-        val q = e.filter(col("vec_id") < 20)
-          .selectExpr("vec_id AS query_id", "embedding AS qe", "n2 AS qn2")
-        val c = e.selectExpr("vec_id AS neighbor_id", "embedding AS ce", "n2 AS cn2")
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id"))
-        c.crossJoin(broadcast(q))
-          .filter(col("query_id") =!= col("neighbor_id"))
-          .selectExpr("query_id", "neighbor_id",
-            "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= TopK)
-          .orderBy("query_id", "rn")
+        val e = bruteCorpus(s, d, "q_ann_cosine")
+        cosineTopK(Query.of(e.filter(col("vec_id") < 20)), Corpus.of(e), Nil,
+          Query.id, TopK, Nil)
       },
-      s"""WITH $duckNormCte
-         |SELECT query_id, neighbor_id, cosine, rn FROM (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |    ${duckCos("q", "c")} AS cosine,
-         |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-         |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
-         |  FROM e q JOIN e c ON q.vec_id <> c.vec_id
-         |  WHERE q.vec_id < 20
-         |) WHERE rn <= $TopK ORDER BY query_id, rn""".stripMargin),
+      duckCosineTopK(duckNormCte, "e", "e", "", "query_id", TopK, Nil,
+        "q.vec_id < 20")),
 
     // LSH-bucketed ANN: join only within hyperplane-sign buckets. The
     // bucketed frame is scratch-persisted so the self-join's two branches
@@ -2833,19 +2879,8 @@ object SimilarityQueries {
     "q_ann_lsh" -> QueryDef(
       (s, d) => {
         val e = ScratchCache.scratch(lshBucketed(s, d, adaptivePlanes(corpusN(s, d))))
-        val q = e.selectExpr("vec_id AS query_id", "embedding AS qe",
-          "n2 AS qn2", "bucket")
-        val c = e.selectExpr("vec_id AS neighbor_id", "embedding AS ce",
-          "n2 AS cn2", "bucket")
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id"))
-        q.join(c, Seq("bucket"))
-          .filter(col("query_id") =!= col("neighbor_id"))
-          .selectExpr("query_id", "neighbor_id", "bucket",
-            "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 3)
-          .orderBy("query_id", "rn")
+        cosineTopK(Query.of(e, "bucket"), Corpus.of(e, "bucket"), Seq("bucket"),
+          Query.id, 3, Seq("bucket"))
       }, lshOracle),
 
     // Salted LSH ANN: same semantics as q_ann_lsh (same oracle — salting
@@ -2863,21 +2898,11 @@ object SimilarityQueries {
         val sized = e.join(broadcast(counts), Seq("bucket"))
           .withColumn("nsalt",
             greatest(lit(1L), ceil(col("bn") / lit(SaltBucketRows))).cast("int"))
-        val c = sized.selectExpr("vec_id AS neighbor_id", "embedding AS ce",
-          "n2 AS cn2", "bucket",
+        val c = Corpus.of(sized, "bucket",
           "CAST(pmod(xxhash64(vec_id), nsalt) AS INT) AS salt")
-        val q = sized.selectExpr("vec_id AS query_id", "embedding AS qe",
-          "n2 AS qn2", "bucket", "nsalt")
+        val q = Query.of(sized, "bucket", "nsalt")
           .withColumn("salt", explode(sequence(lit(0), col("nsalt") - 1)))
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id"))
-        q.join(c, Seq("bucket", "salt"))
-          .filter(col("query_id") =!= col("neighbor_id"))
-          .selectExpr("query_id", "neighbor_id", "bucket",
-            "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 3)
-          .orderBy("query_id", "rn")
+        cosineTopK(q, c, Seq("bucket", "salt"), Query.id, 3, Seq("bucket"))
       }, lshOracle),
 
     // Density-adaptive LSH ANN — the clustered-corpus LSH path. Plain
@@ -2894,29 +2919,12 @@ object SimilarityQueries {
     "q_ann_lsh_adaptive" -> QueryDef(
       (s, d) => {
         val e = lshRefined(s, d)
-        val q = e.selectExpr("vec_id AS query_id", "embedding AS qe",
-          "n2 AS qn2", "bucket", "cell")
-        val c = e.selectExpr("vec_id AS neighbor_id", "embedding AS ce",
-          "n2 AS cn2", "bucket", "cell")
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id"))
-        q.join(c, Seq("bucket", "cell"))
-          .filter(col("query_id") =!= col("neighbor_id"))
-          .selectExpr("query_id", "neighbor_id", "bucket", "cell",
-            "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 3)
-          .orderBy("query_id", "rn")
+        cosineTopK(Query.of(e, "bucket", "cell"), Corpus.of(e, "bucket", "cell"),
+          Seq("bucket", "cell"), Query.id, 3, Seq("bucket", "cell"))
       },
-      s"""WITH $duckLshRefinedEbCte
-         |SELECT query_id, neighbor_id, bucket, cell, cosine, rn FROM (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |    q.bucket, q.cell, ${duckCos("q", "c")} AS cosine,
-         |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-         |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
-         |  FROM eb q JOIN eb c ON q.bucket = c.bucket AND q.cell = c.cell
-         |    AND q.vec_id <> c.vec_id
-         |) WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin),
+      duckCosineTopK(duckLshRefinedEbCte, "eb", "eb",
+        "q.bucket = c.bucket AND q.cell = c.cell", "query_id", 3,
+        Seq("q.bucket", "q.cell"))),
 
     // Incremental ANN: a batch of ARRIVING vectors (vec_id % 10 = 0, the
     // next ingest micro-batch) probes the EXISTING corpus's IVF cells
@@ -2926,37 +2934,8 @@ object SimilarityQueries {
     // vectors quantize to; per-batch cost ∝ batch size, not corpus size
     // — the vector twin of q_dedup_incremental.
     "q_ann_incremental" -> QueryDef(
-      (s, d) => {
-        GraftFunctions.register(s)
-        graft.functions.TextHashFunctions.register(s)
-        val (sc, mc) = superSplit(adaptiveCells(corpusN(s, d)))
-        val e = ScratchCache.scratch(Tables.embeddingsParallel(s, d)
-          .selectExpr("vec_id", "embedding",
-            "graft_vec_dot(embedding, embedding) AS n2",
-            s"CAST(graft_ivf_cell_h(embedding, $sc, $mc) AS INT) AS cell"))
-        val q = e.filter(col("vec_id") % 10 === 0)
-          .selectExpr("vec_id AS arrival_id", "embedding AS qe", "n2 AS qn2", "cell")
-        val c = e.filter(col("vec_id") % 10 =!= 0)
-          .selectExpr("vec_id AS neighbor_id", "embedding AS ce", "n2 AS cn2", "cell")
-        val w = Window.partitionBy("arrival_id")
-          .orderBy(col("cosine").desc, col("neighbor_id"))
-        q.join(c, Seq("cell"))
-          .selectExpr("arrival_id", "neighbor_id", "cell",
-            "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 3)
-          .orderBy("arrival_id", "rn")
-      }, {
-        s"""WITH $duckTwoLevelEbCte
-           |SELECT arrival_id, neighbor_id, cell, cosine, rn FROM (
-           |  SELECT q.vec_id AS arrival_id, c.vec_id AS neighbor_id, q.cell,
-           |    ${duckCos("q", "c")} AS cosine,
-           |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-           |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
-           |  FROM eb q JOIN eb c ON q.cell = c.cell
-           |  WHERE q.vec_id % 10 = 0 AND c.vec_id % 10 <> 0
-           |) WHERE rn <= 3 ORDER BY arrival_id, rn""".stripMargin
-      }),
+      (s, d) => servedIngestProbe(hashCells(s, d)),
+      duckIngestSql(duckTwoLevelEbCte, "eb")),
 
     // Incremental ANN on the TRAINED codebook — the ingest story for
     // the clustered-corpus path. The codebook is trained on the
@@ -2988,76 +2967,13 @@ object SimilarityQueries {
       (s, d) => annIngest(s, d, cap = Some(1L)),
       duckIncrementalL3Sql),
 
-    // STREAMING ANN ingest on the served trained index — the
-    // production write path of the clustered-corpus family, now under
-    // the oracle as one declared query instead of only a spec
-    // (TrainedWriteSpec proves the pruning mechanics; this proves the
-    // composed micro-batch SEMANTICS): the existing corpus is written
-    // PARTITIONED BY its trained cell (cells are stable — the codebook
-    // trains on existing rows only, q_ann_incremental_trained's
-    // seedWhere contract), the arrival feed lands as an unbounded file
-    // stream (maxFilesPerTrigger=1 → 3 real triggers), and each
-    // micro-batch probes ONLY its arrivals' home cells — a
-    // partition-pruned read of the served table, per-batch cost
-    // ∝ batch size at any corpus size — appending its top-3 rows.
-    // Arrival batches are key-disjoint, so per-arrival top-3 completes
-    // within one batch and the appended union EQUALS the one-shot
-    // batch query: SAME oracle as q_ann_incremental_trained.
+    // STREAMING ANN ingest on the served trained index ([[streamIngest]]:
+    // served table partitioned by cell, arrival file stream, per-batch
+    // home-cell-pruned probe, append) — the appended union EQUALS the
+    // one-shot batch query: SAME oracle as q_ann_incremental_trained.
     "q_stream_ann_ingest" -> QueryDef(
-      (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val tag = new java.io.File(d).getName
-        val root = s"${graft.ProcScratch.base}/stream_ann/$tag"
-        val watch = s"$root/_arrivals"
-        val fs = new org.apache.hadoop.fs.Path(root)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(root), true)
-        val e = trainedCells(s, d, seedWhere = "vec_id % 10 <> 0")
-        // the SERVED table: existing rows, one directory per cell
-        e.filter(col("vec_id") % 10 =!= 0)
-          .select("vec_id", "embedding", "n2", "cell")
-          .write.partitionBy("cell").parquet(s"$root/corpus")
-        // the arrival feed: 3 key-disjoint chunks (vec_id/10 mod 3)
-        val arrSchema = graft.sources.Sources.stageChunks(s,
-          e.filter(col("vec_id") % 10 === 0)
-            .select("vec_id", "embedding", "n2", "cell"),
-          expr("(vec_id div 10) % 3"), 3, s"$root/_arr_stage", watch, "arr")
-        // hoisted OUT of the trigger body (r13): the served table is
-        // immutable across triggers, so its directory listing + schema
-        // inference need to run once, not once per micro-batch; the
-        // per-batch cell filter below still partition-prunes this frame
-        val corpusBase = s.read.parquet(s"$root/corpus")
-          .withColumn("cell", col("cell").cast("long"))
-        val q = s.readStream.schema(arrSchema)
-          .option("maxFilesPerTrigger", "1").parquet(watch)
-          .writeStream
-          .option("checkpointLocation", s"$root/_checkpoint")
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            // bounded collect: the batch's distinct home cells — the
-            // partition-pruning predicate for the served-table scan
-            val cells = batch.select("cell").distinct()
-              .collect().map(_.getLong(0))
-            val corpus = corpusBase
-              .filter(col("cell").isin(cells: _*))
-              .selectExpr("vec_id AS neighbor_id", "embedding AS ce",
-                "n2 AS cn2", "cell")
-            val probes = batch.selectExpr("vec_id AS arrival_id",
-              "embedding AS qe", "n2 AS qn2", "cell")
-            val w = Window.partitionBy("arrival_id")
-              .orderBy(col("cosine").desc, col("neighbor_id"))
-            probes.join(corpus, Seq("cell"))
-              .selectExpr("arrival_id", "neighbor_id", "cell",
-                "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
-              .withColumn("rn", row_number().over(w))
-              .filter(col("rn") <= 3)
-              .write.mode("append").parquet(s"$root/out")
-            ()
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.read.parquet(s"$root/out").orderBy("arrival_id", "rn")
-      },
+      (s, d) => streamIngest(s, d, "stream_ann",
+        trainedCells(s, d, seedWhere = "vec_id % 10 <> 0")),
       duckIncrementalTrainedSql),
 
     // DELETES on the served ANN index (r10, the r09 verdict's item 5):
@@ -3079,7 +2995,7 @@ object SimilarityQueries {
       (s, d) => servedDeleteProbe(s,
         s"${graft.ProcScratch.base}/ann_delete/${new java.io.File(d).getName}",
         trainedCells(s, d)),
-      duckDeleteTrainedSql),
+      duckDeleteSql(duckTrainedEbCte, "eb")),
 
     // The facade DELETE arms (r12): removing a batch follows the same
     // route law as building — annDelete = annIndex (the routed book)
@@ -3091,12 +3007,12 @@ object SimilarityQueries {
       (s, d) => annDelete(s, d,
         s"${graft.ProcScratch.base}/ann_delete_auto/" +
           new java.io.File(d).getName),
-      duckDeleteTrainedSql),
+      duckDeleteSql(duckTrainedEbCte, "eb")),
     "q_ann_delete_auto_l3" -> QueryDef(
       (s, d) => annDelete(s, d,
         s"${graft.ProcScratch.base}/ann_delete_auto_l3/" +
           new java.io.File(d).getName, cap = Some(1L)),
-      duckDeleteL3Sql),
+      duckDeleteSql(duckTrainedL3Cte, "ebl3")),
 
     // IVF-flat ANN: coarse-quantize into Voronoi cells, then search
     // only within the query's cell. The other linear-scale path next to
@@ -3108,39 +3024,8 @@ object SimilarityQueries {
     // r06 flat argmin forced c ∝ √N and an O(N^1.5) floor, measured
     // 60.7× at 100×.
     "q_ann_ivf" -> QueryDef(
-      (s, d) => {
-        GraftFunctions.register(s)
-        graft.functions.TextHashFunctions.register(s)
-        // native two-level argmin kernel (bit-identical to the SQL CTE
-        // chain) + persist so the self-join doesn't assign cells twice
-        val (sc, mc) = superSplit(adaptiveCells(corpusN(s, d)))
-        val e = ScratchCache.scratch(Tables.embeddingsParallel(s, d)
-          .selectExpr("vec_id", "embedding",
-            "graft_vec_dot(embedding, embedding) AS n2",
-            s"CAST(graft_ivf_cell_h(embedding, $sc, $mc) AS INT) AS cell"))
-        val q = e.selectExpr("vec_id AS query_id", "embedding AS qe",
-          "n2 AS qn2", "cell")
-        val c = e.selectExpr("vec_id AS neighbor_id", "embedding AS ce",
-          "n2 AS cn2", "cell")
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id"))
-        q.join(c, Seq("cell"))
-          .filter(col("query_id") =!= col("neighbor_id"))
-          .selectExpr("query_id", "neighbor_id", "cell",
-            "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 3)
-          .orderBy("query_id", "rn")
-      }, {
-        s"""WITH $duckTwoLevelEbCte
-           |SELECT query_id, neighbor_id, cell, cosine, rn FROM (
-           |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, q.cell,
-           |    ${duckCos("q", "c")} AS cosine,
-           |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-           |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
-           |  FROM eb q JOIN eb c ON q.cell = c.cell AND q.vec_id <> c.vec_id
-           |) WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin
-      }),
+      (s, d) => homeTopK(hashCells(s, d)),
+      duckHomeSql(duckTwoLevelEbCte, "eb")),
 
     // TRAINED (data-seeded) IVF — the density-adaptive answer to the
     // clustered stress finding (SCALE_r08_clustered_ann.json:
@@ -3159,7 +3044,7 @@ object SimilarityQueries {
     // q_ann_ivf family documents, and the index build adds two bounded
     // collects (the budget-bounded codebook) + one broadcast.
     "q_ann_ivf_trained" -> QueryDef(
-      (s, d) => trainedAnnSearch(trainedCells(s, d)),
+      (s, d) => homeTopK(trainedCells(s, d)),
       duckTrainedAnnSql),
 
     // The DISTRIBUTED-codebook build of the same index — identical cell
@@ -3172,7 +3057,7 @@ object SimilarityQueries {
     // codebook-growth ceiling, closed by construction instead of a
     // Scaladoc promise. Search shape after the build is q_ann_ivf_trained's.
     "q_ann_ivf_trained_dist" -> QueryDef(
-      (s, d) => trainedAnnSearch(trainedCellsDist(s, d)),
+      (s, d) => homeTopK(trainedCellsDist(s, d)),
       duckTrainedAnnSql),
 
     // ADAPTIVE-nprobe ANN SEARCH — the target-retention knob
@@ -3197,30 +3082,11 @@ object SimilarityQueries {
     "q_ann_ivf_trained_adaptive" -> QueryDef(
       (s, d) => {
         val e = trainedAdaptiveCells(s, d, AdaptNSupers, AdaptMaxProbes,
-          AdaptEpsNum, AdaptEpsDen, interleave = true)
-        val probes = e.selectExpr("vec_id AS query_id", "embedding AS qe",
-          "n2 AS qn2", "explode(probes) AS cell")
-        val c = e.selectExpr("vec_id AS neighbor_id", "embedding AS ce",
-          "n2 AS cn2", "cell")
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id"))
-        probes.join(c, Seq("cell"))
-          .filter(col("query_id") =!= col("neighbor_id"))
-          .selectExpr("query_id", "neighbor_id", "cell",
-            "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 3)
-          .orderBy("query_id", "rn")
+          AdaptEpsNum, AdaptEpsDen)
+        cellTopK(Query.of(e, "explode(probes) AS cell"), e)
       },
-      s"""WITH $duckAdaptiveProbesCte
-         |SELECT query_id, neighbor_id, cell, cosine, rn FROM (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, c.cell,
-         |    ${duckCos("q", "c")} AS cosine,
-         |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-         |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
-         |  FROM aprobes q JOIN eb c ON q.cell = c.cell
-         |    AND q.vec_id <> c.vec_id
-         |) WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin),
+      duckCosineTopK(duckAdaptiveProbesCte, "aprobes", "eb", "q.cell = c.cell",
+        "query_id", 3, Seq("c.cell"))),
 
     // The ANN FACADE (r11): one entry point, book picked by the cell
     // law ([[annBook]] — two-level while ⌈N/125⌉ fits the 2^24 cap,
@@ -3230,7 +3096,7 @@ object SimilarityQueries {
     // facade under the identical oracle; the forced-L3 arm is gated by
     // the _l3 twin below and by AnnClusteredStress's ann_auto rows.
     "q_ann_index_auto" -> QueryDef(
-      (s, d) => trainedAnnSearch(annIndex(s, d)),
+      (s, d) => homeTopK(annIndex(s, d)),
       duckTrainedAnnSql),
 
     // The facade's L3 arm under the oracle: the explicit cell-cap
@@ -3242,16 +3108,8 @@ object SimilarityQueries {
     // fixture scale END TO END (facade → L3 build → search → oracle),
     // not just route-asserted.
     "q_ann_index_auto_l3" -> QueryDef(
-      (s, d) => trainedAnnSearch(annIndex(s, d, cap = Some(1L))),
-      s"""WITH $duckTrainedL3Cte
-         |SELECT query_id, neighbor_id, cell, cosine, rn FROM (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, q.cell,
-         |    ${duckCos("q", "c")} AS cosine,
-         |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-         |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
-         |  FROM ebl3 q JOIN ebl3 c ON q.cell = c.cell
-         |    AND q.vec_id <> c.vec_id
-         |) WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin),
+      (s, d) => homeTopK(annIndex(s, d, cap = Some(1L))),
+      duckTrainedL3AnnSql),
 
     // The THREE-LEVEL trained quantizer — the routing law past the
     // two-level family's 2^24-cell cap (constant occupancy dies at
@@ -3265,16 +3123,8 @@ object SimilarityQueries {
     // reusing duckTrainedAnnSql; search shape after the build is
     // q_ann_ivf_trained's.
     "q_ann_ivf_trained_l3" -> QueryDef(
-      (s, d) => trainedAnnSearch(trainedCellsL3(s, d)),
-      s"""WITH $duckTrainedL3Cte
-         |SELECT query_id, neighbor_id, cell, cosine, rn FROM (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, q.cell,
-         |    ${duckCos("q", "c")} AS cosine,
-         |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-         |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
-         |  FROM ebl3 q JOIN ebl3 c ON q.cell = c.cell
-         |    AND q.vec_id <> c.vec_id
-         |) WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin),
+      (s, d) => homeTopK(trainedCellsL3(s, d)),
+      duckTrainedL3AnnSql),
 
     // The three-level route's nprobe=2 knob: each query also probes
     // the beam's best leaf in a DIFFERENT cell — the boundary-adjacent
@@ -3287,30 +3137,13 @@ object SimilarityQueries {
     "q_ann_ivf_trained_l3_probe2" -> QueryDef(
       (s, d) => {
         val e = trainedCellsL3(s, d, probe2 = true)
-        val probes = probeUnion(e, "query_id", "qe", "qn2", useCell3 = false)
-        val c = e.selectExpr("vec_id AS neighbor_id", "embedding AS ce",
-          "n2 AS cn2", "cell")
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id"))
-        probes.join(c, Seq("cell"))
-          .filter(col("query_id") =!= col("neighbor_id"))
-          .selectExpr("query_id", "neighbor_id", "cell",
-            "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 3)
-          .orderBy("query_id", "rn")
+        cellTopK(probeUnion(e, Query, useCell3 = false), e)
       },
-      s"""WITH $duckTrainedL3P2Cte,
-         |tprobes AS (
-         |  ${duckProbes("ebl3p", useCell3 = false)})
-         |SELECT query_id, neighbor_id, cell, cosine, rn FROM (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, q.cell,
-         |    ${duckCos("q", "c")} AS cosine,
-         |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-         |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
-         |  FROM tprobes q JOIN ebl3p c ON q.cell = c.cell
-         |    AND q.vec_id <> c.vec_id
-         |) WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin),
+      duckCosineTopK(
+        s"""$duckTrainedL3P2Cte,
+           |tprobes AS (
+           |  ${duckProbes("ebl3p", useCell3 = false)})""".stripMargin,
+        "tprobes", "ebl3p", "q.cell = c.cell", "query_id", 3, Seq("q.cell"))),
 
     // The ADAPTIVE-nprobe knob on the THREE-LEVEL book (r12) — the
     // margin law of q_ann_ivf_trained_adaptive applied where the L3
@@ -3327,29 +3160,10 @@ object SimilarityQueries {
     "q_ann_ivf_trained_l3_adaptive" -> QueryDef(
       (s, d) => {
         val e = trainedCellsL3(s, d, adaptive = true)
-        val probes = e.selectExpr("vec_id AS query_id", "embedding AS qe",
-          "n2 AS qn2", "explode(probes) AS cell")
-        val c = e.selectExpr("vec_id AS neighbor_id", "embedding AS ce",
-          "n2 AS cn2", "cell")
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id"))
-        probes.join(c, Seq("cell"))
-          .filter(col("query_id") =!= col("neighbor_id"))
-          .selectExpr("query_id", "neighbor_id", "cell",
-            "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 3)
-          .orderBy("query_id", "rn")
+        cellTopK(Query.of(e, "explode(probes) AS cell"), e)
       },
-      s"""WITH $duckTrainedL3AdpCte
-         |SELECT query_id, neighbor_id, cell, cosine, rn FROM (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, c.cell,
-         |    ${duckCos("q", "c")} AS cosine,
-         |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-         |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
-         |  FROM l3aprobes q JOIN ebl3 c ON q.cell = c.cell
-         |    AND q.vec_id <> c.vec_id
-         |) WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin),
+      duckCosineTopK(duckTrainedL3AdpCte, "l3aprobes", "ebl3",
+        "q.cell = c.cell", "query_id", 3, Seq("c.cell"))),
 
     // L3 SERVED-INDEX PARITY (r11): the 10⁹+-row regime the L3 book
     // exists for gets the same serving surface the two-level book has.
@@ -3364,62 +3178,12 @@ object SimilarityQueries {
         trainedCellsL3Inc(s, d, "vec_id % 10 <> 0")),
       duckIncrementalL3Sql),
 
-    // STREAMING ingest on the served L3 index — q_stream_ann_ingest's
-    // micro-batch semantics (served table partitioned by cell, arrival
-    // file stream, per-batch home-cell-pruned probe, append) with the
-    // THREE-level book underneath. Arrival batches are key-disjoint,
-    // so the appended union equals the one-shot batch query: same
-    // oracle as q_ann_incremental_l3.
+    // STREAMING ingest on the served L3 index — q_stream_ann_ingest
+    // with the THREE-level book underneath: same oracle as
+    // q_ann_incremental_l3.
     "q_stream_ann_ingest_l3" -> QueryDef(
-      (s, d) => {
-        import org.apache.spark.sql.streaming.Trigger
-        val tag = new java.io.File(d).getName
-        val root = s"${graft.ProcScratch.base}/stream_ann_l3/$tag"
-        val watch = s"$root/_arrivals"
-        val fs = new org.apache.hadoop.fs.Path(root)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(root), true)
-        val e = trainedCellsL3Inc(s, d, "vec_id % 10 <> 0")
-        e.filter(col("vec_id") % 10 =!= 0)
-          .select("vec_id", "embedding", "n2", "cell")
-          .write.partitionBy("cell").parquet(s"$root/corpus")
-        // the q_stream_ann_ingest arrival feed: 3 key-disjoint chunks
-        val arrSchema = graft.sources.Sources.stageChunks(s,
-          e.filter(col("vec_id") % 10 === 0)
-            .select("vec_id", "embedding", "n2", "cell"),
-          expr("(vec_id div 10) % 3"), 3, s"$root/_arr_stage", watch, "arr")
-        // hoisted corpus read — one listing/inference for all triggers
-        // (q_stream_ann_ingest's rationale)
-        val corpusBase = s.read.parquet(s"$root/corpus")
-          .withColumn("cell", col("cell").cast("long"))
-        val q = s.readStream.schema(arrSchema)
-          .option("maxFilesPerTrigger", "1").parquet(watch)
-          .writeStream
-          .option("checkpointLocation", s"$root/_checkpoint")
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val cells = batch.select("cell").distinct()
-              .collect().map(_.getLong(0))
-            val corpus = corpusBase
-              .filter(col("cell").isin(cells: _*))
-              .selectExpr("vec_id AS neighbor_id", "embedding AS ce",
-                "n2 AS cn2", "cell")
-            val probes = batch.selectExpr("vec_id AS arrival_id",
-              "embedding AS qe", "n2 AS qn2", "cell")
-            val w = Window.partitionBy("arrival_id")
-              .orderBy(col("cosine").desc, col("neighbor_id"))
-            probes.join(corpus, Seq("cell"))
-              .selectExpr("arrival_id", "neighbor_id", "cell",
-                "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
-              .withColumn("rn", row_number().over(w))
-              .filter(col("rn") <= 3)
-              .write.mode("append").parquet(s"$root/out")
-            ()
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.read.parquet(s"$root/out").orderBy("arrival_id", "rn")
-      },
+      (s, d) => streamIngest(s, d, "stream_ann_l3",
+        trainedCellsL3Inc(s, d, "vec_id % 10 <> 0")),
       duckIncrementalL3Sql),
 
     // DELETES on the served L3 index — q_ann_delete's contract
@@ -3434,7 +3198,7 @@ object SimilarityQueries {
         s"${graft.ProcScratch.base}/ann_delete_l3/" +
           new java.io.File(d).getName,
         trainedCellsL3(s, d)),
-      duckDeleteL3Sql),
+      duckDeleteSql(duckTrainedL3Cte, "ebl3")),
 
     // Trained IVF with nprobe=2 — the recall knob on the CLUSTERED-corpus
     // path: each query probes its home trained cell AND the best child of
@@ -3446,36 +3210,19 @@ object SimilarityQueries {
     // with the data-seeded codebook instead of the hash one.
     "q_ann_ivf_trained_probe2" -> QueryDef(
       (s, d) => {
-        val e = trainedCells(s, d, probe2 = true)
         // cell2 = cell happens only on the kernel's degenerate fallbacks
         // (single-super codebook / duplicate-super empty block — never
-        // at fixture knobs); dropping that branch row keeps the probe
-        // fan-out pair-disjoint instead of duplicating every
+        // at fixture knobs); probeUnion drops that branch row, keeping
+        // the probe fan-out pair-disjoint instead of duplicating every
         // (query, neighbor) pair through the rn<=3 window
-        val probes = probeUnion(e, "query_id", "qe", "qn2", useCell3 = false)
-        val c = e.selectExpr("vec_id AS neighbor_id", "embedding AS ce",
-          "n2 AS cn2", "cell")
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id"))
-        probes.join(c, Seq("cell"))
-          .filter(col("query_id") =!= col("neighbor_id"))
-          .selectExpr("query_id", "neighbor_id", "cell",
-            "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 3)
-          .orderBy("query_id", "rn")
+        val e = trainedCells(s, d, probe2 = true)
+        cellTopK(probeUnion(e, Query, useCell3 = false), e)
       },
-      s"""WITH $duckTrainedEb2Cte,
-         |tprobes AS (
-         |  ${duckProbes("eb2", useCell3 = false)})
-         |SELECT query_id, neighbor_id, cell, cosine, rn FROM (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, q.cell,
-         |    ${duckCos("q", "c")} AS cosine,
-         |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-         |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
-         |  FROM tprobes q JOIN eb2 c ON q.cell = c.cell
-         |    AND q.vec_id <> c.vec_id
-         |) WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin),
+      duckCosineTopK(
+        s"""$duckTrainedEb2Cte,
+           |tprobes AS (
+           |  ${duckProbes("eb2", useCell3 = false)})""".stripMargin,
+        "tprobes", "eb2", "q.cell = c.cell", "query_id", 3, Seq("q.cell"))),
 
     // Trained IVF with nprobe=3 — both boundary probes at once: the
     // second-nearest super's best child (cell2, cross-super seam) AND
@@ -3488,8 +3235,10 @@ object SimilarityQueries {
     // like the probe2 query. Recall ordering probe3 ≥ probe2 ≥ probe1
     // is measured in AnnClusteredStress on the clustered corpus.
     "q_ann_ivf_trained_probe3" -> QueryDef(
-      (s, d) => trainedProbe3Search(
-        trainedCells(s, d, probe2 = true, probe3 = true)),
+      (s, d) => {
+        val e = trainedCells(s, d, probe2 = true, probe3 = true)
+        cellTopK(probeUnion(e, Query, useCell3 = true), e)
+      },
       duckTrainedProbe3Sql),
 
     // The nprobe=3 search through the DISTRIBUTED codebook build — the
@@ -3501,8 +3250,10 @@ object SimilarityQueries {
     // tie-law drift in SuperArgmin2Broadcast/ChildBlockArgmin2 cannot
     // ride a green default gate).
     "q_ann_ivf_trained_probe3_dist" -> QueryDef(
-      (s, d) => trainedProbe3Search(
-        trainedCellsDist(s, d, probe2 = true, probe3 = true)),
+      (s, d) => {
+        val e = trainedCellsDist(s, d, probe2 = true, probe3 = true)
+        cellTopK(probeUnion(e, Query, useCell3 = true), e)
+      },
       duckTrainedProbe3Sql),
 
     // IVF with nprobe=2 — the canonical recall knob: each query probes
@@ -3527,53 +3278,37 @@ object SimilarityQueries {
             "graft_vec_dot(embedding, embedding) AS n2",
             s"CAST(graft_ivf_cell_h(embedding, $sc, $mc) AS INT) AS cell1",
             s"CAST(graft_ivf_cell_h2(embedding, $sc, $mc) AS INT) AS cell2"))
-        val probes = e.selectExpr("vec_id AS query_id", "embedding AS qe",
-            "n2 AS qn2", "cell1 AS cell")
-          .unionAll(e.selectExpr("vec_id AS query_id", "embedding AS qe",
-            "n2 AS qn2", "cell2 AS cell"))
-        val c = e.selectExpr("vec_id AS neighbor_id", "embedding AS ce",
-          "n2 AS cn2", "cell1 AS cell")
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("neighbor_id"))
-        probes.join(c, Seq("cell"))
-          .filter(col("query_id") =!= col("neighbor_id"))
-          .selectExpr("query_id", "neighbor_id", "cell",
-            "(graft_vec_dot(qe, ce) / sqrt(qn2 * cn2)) AS cosine")
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 3)
-          .orderBy("query_id", "rn")
+        val probes = Query.of(e, "cell1 AS cell")
+          .unionAll(Query.of(e, "cell2 AS cell"))
+        cosineTopK(probes, Corpus.of(e, "cell1 AS cell"), Seq("cell"),
+          Query.id, 3, Seq("cell"))
       }, {
         val d = DuckSql
-        s"""WITH $duckKnobsCte,
-           |e0 AS (SELECT vec_id, embedding,
-           |    ${d.dotDbl("embedding", "embedding")} AS n2, s, m
-           |  FROM embeddings, knobs),
-           |e1 AS (SELECT *, ${duckSuperDists("embedding")} AS sd FROM e0),
-           |e2 AS (SELECT *, (CAST(list_position(sd, list_min(sd)) AS INT) - 1)
-           |    AS si FROM e1),
-           |e2b AS (SELECT *, list_transform(generate_series(1, s),
-           |    ii -> CASE WHEN ii = si + 1 THEN CAST('infinity' AS DOUBLE)
-           |          ELSE sd[ii] END) AS sd2 FROM e2),
-           |e2c AS (SELECT *, (CAST(list_position(sd2, list_min(sd2)) AS INT) - 1)
-           |    AS si2 FROM e2b),
-           |e3 AS (SELECT *, ${duckChildDists("embedding", "si")} AS cd,
-           |    ${duckChildDists("embedding", "si2")} AS cd2 FROM e2c),
-           |v3 AS (SELECT vec_id, embedding, n2,
-           |    CAST(si * m + list_position(cd, list_min(cd)) AS INT) AS cell1,
-           |    CAST(si2 * m + list_position(cd2, list_min(cd2)) AS INT) AS cell2
-           |  FROM e3),
-           |probes AS (
-           |  SELECT vec_id, embedding, n2, cell1 AS cell FROM v3
-           |  UNION ALL
-           |  SELECT vec_id, embedding, n2, cell2 AS cell FROM v3
-           |)
-           |SELECT query_id, neighbor_id, cell, cosine, rn FROM (
-           |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, q.cell,
-           |    ${duckCos("q", "c")} AS cosine,
-           |    ROW_NUMBER() OVER (PARTITION BY q.vec_id
-           |      ORDER BY ${duckCos("q", "c")} DESC, c.vec_id) AS rn
-           |  FROM probes q JOIN v3 c ON q.cell = c.cell1 AND q.vec_id <> c.vec_id
-           |) WHERE rn <= 3 ORDER BY query_id, rn""".stripMargin
+        duckCosineTopK(
+          s"""$duckKnobsCte,
+             |e0 AS (SELECT vec_id, embedding,
+             |    ${d.dotDbl("embedding", "embedding")} AS n2, s, m
+             |  FROM embeddings, knobs),
+             |e1 AS (SELECT *, ${duckSuperDists("embedding")} AS sd FROM e0),
+             |e2 AS (SELECT *, (CAST(list_position(sd, list_min(sd)) AS INT) - 1)
+             |    AS si FROM e1),
+             |e2b AS (SELECT *, list_transform(generate_series(1, s),
+             |    ii -> CASE WHEN ii = si + 1 THEN CAST('infinity' AS DOUBLE)
+             |          ELSE sd[ii] END) AS sd2 FROM e2),
+             |e2c AS (SELECT *, (CAST(list_position(sd2, list_min(sd2)) AS INT) - 1)
+             |    AS si2 FROM e2b),
+             |e3 AS (SELECT *, ${duckChildDists("embedding", "si")} AS cd,
+             |    ${duckChildDists("embedding", "si2")} AS cd2 FROM e2c),
+             |v3 AS (SELECT vec_id, embedding, n2,
+             |    CAST(si * m + list_position(cd, list_min(cd)) AS INT) AS cell1,
+             |    CAST(si2 * m + list_position(cd2, list_min(cd2)) AS INT) AS cell2
+             |  FROM e3),
+             |probes AS (
+             |  SELECT vec_id, embedding, n2, cell1 AS cell FROM v3
+             |  UNION ALL
+             |  SELECT vec_id, embedding, n2, cell2 AS cell FROM v3
+             |)""".stripMargin,
+          "probes", "v3", "q.cell = c.cell1", "query_id", 3, Seq("q.cell"))
       }),
 
 
@@ -3603,35 +3338,8 @@ object SimilarityQueries {
     // bit-identical. The oracle derives the SAME codebook relationally
     // (windowed-argmin CTEs, shared text in pqOracleCtes).
     "q_ann_pq" -> QueryDef(
-      (s, d) => {
-        val v = pqQuantized(s, d)
-        val book = pqLearnBook(v)
-        val codes = pqCodes(v, book)
-        val qdist = pqQdist(s, v, book)
-        val est = codes.join(broadcast(qdist),
-            codes("ss") === qdist("ss") && codes("code") === qdist("cid"))
-          .filter(col("query_id") =!= col("vec_id"))
-          .groupBy("query_id", "vec_id")
-          .agg(sum("qd2").as("est_d2"))
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("est_d2").asc, col("vec_id").asc)
-        est.withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= TopK)
-          .selectExpr("query_id", "vec_id AS neighbor_id", "est_d2", "rn")
-          .orderBy("query_id", "rn")
-      },
-      s"""WITH $pqOracleCtes,
-         |est AS (
-         |  SELECT q.query_id, k.vec_id, CAST(sum(q.qd2) AS BIGINT) AS est_d2
-         |  FROM codes k JOIN qd q ON q.ss = k.ss AND q.cid = k.code
-         |  WHERE q.query_id <> k.vec_id
-         |  GROUP BY q.query_id, k.vec_id)
-         |SELECT query_id, neighbor_id, est_d2, rn FROM (
-         |  SELECT query_id, vec_id AS neighbor_id, est_d2,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY est_d2, vec_id) AS rn
-         |  FROM est) WHERE rn <= $TopK
-         |ORDER BY query_id, rn""".stripMargin),
+      (s, d) => estTopK(pq16Est(s, pqQuantized(s, d), None)),
+      duckEstTopK(s"$pqOracleCtes,\n${duckAdcEst("")}")),
 
     // IVF-PQ — the COMPOSED production ANN index (Jégou et al.'s full
     // recipe, the FAISS IVFPQ shape): the IVF coarse quantizer routes
@@ -3652,43 +3360,15 @@ object SimilarityQueries {
     "q_ann_ivfpq" -> QueryDef(
       (s, d) => {
         val v = pqQuantized(s, d)
-        val book = pqLearnBook(v)
-        val codes = pqCodes(v, book)
-        val qdist = pqQdist(s, v, book)
-          .join(v.filter(col("vec_id") < PqQueries)
-            .selectExpr("vec_id AS query_id", "cell AS qcell"), "query_id")
-        val est = codes.join(broadcast(qdist),
-            codes("ss") === qdist("ss") && codes("code") === qdist("cid") &&
-              codes("cell") === qdist("qcell"))
-          .filter(col("query_id") =!= col("vec_id"))
-          .groupBy("query_id", "vec_id")
-          .agg(sum("qd2").as("est_d2"))
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("est_d2").asc, col("vec_id").asc)
-        est.withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= TopK)
-          .selectExpr("query_id", "vec_id AS neighbor_id", "est_d2", "rn")
-          .orderBy("query_id", "rn")
+        estTopK(pq16Est(s, v, Some(homeCells(v))))
       },
-      s"""WITH $pqOracleCtes,
-         |cellt AS (
-         |  SELECT vec_id,
-         |    CAST(${argminPos(DuckSql, ivfDists(DuckSql, "embedding"))} AS INT) AS cell
-         |  FROM embeddings),
-         |est AS (
-         |  SELECT q.query_id, k.vec_id, CAST(sum(q.qd2) AS BIGINT) AS est_d2
-         |  FROM codes k
-         |  JOIN qd q ON q.ss = k.ss AND q.cid = k.code
-         |  JOIN cellt ck ON ck.vec_id = k.vec_id
-         |  JOIN cellt cq ON cq.vec_id = q.query_id
-         |  WHERE ck.cell = cq.cell AND q.query_id <> k.vec_id
-         |  GROUP BY q.query_id, k.vec_id)
-         |SELECT query_id, neighbor_id, est_d2, rn FROM (
-         |  SELECT query_id, vec_id AS neighbor_id, est_d2,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY est_d2, vec_id) AS rn
-         |  FROM est) WHERE rn <= $TopK
-         |ORDER BY query_id, rn""".stripMargin),
+      duckEstTopK(
+        s"""$pqOracleCtes,
+           |cellt AS (
+           |  SELECT vec_id,
+           |    CAST(${argminPos(DuckSql, ivfDists(DuckSql, "embedding"))} AS INT) AS cell
+           |  FROM embeddings),
+           |${duckAdcEst(duckSameCell("cellt"))}""".stripMargin)),
 
     // IVF-PQ on the TRAINED coarse quantizer — the composition FAISS
     // actually ships for clustered corpora (train nlist cells on the
@@ -3707,9 +3387,7 @@ object SimilarityQueries {
     // a query reads its cell's files + 4×16 lookup rows.
     "q_ann_ivfpq_trained" -> QueryDef(
       (s, d) => {
-        val v = ScratchCache.scratch(trainedCells(s, d)
-          .selectExpr("vec_id",
-            s"${SparkSql.quantVec("embedding", 1000000L)} AS v", "cell"))
+        val v = ScratchCache.scratch(quantCells(trainedCells(s, d)))
         // PQ code count stays CONSTANT here — r10 tried the nlist law
         // (k = ⌈N/125⌉ clamped 256) and the 10× stress measured the
         // consequence immediately: literal-scan encoding is O(N·k·d),
@@ -3724,43 +3402,13 @@ object SimilarityQueries {
         // scale = q_ann_ivfpq_trained256 below: bounded-sample
         // training + two-level routed encode, LANDED in r10 (ratios
         // 1.26/1.56 at 10x/100x, SCALE_r10_pq256*.json).
-        val book = pqLearnBook(v)
-        val codes = pqCodes(v, book)
-        val qdist = pqQdist(s, v, book)
-          .join(v.filter(col("vec_id") < PqQueries)
-            .selectExpr("vec_id AS query_id", "cell AS qcell"), "query_id")
-        val est = codes.join(broadcast(qdist),
-            codes("ss") === qdist("ss") && codes("code") === qdist("cid") &&
-              codes("cell") === qdist("qcell"))
-          .filter(col("query_id") =!= col("vec_id"))
-          .groupBy("query_id", "vec_id")
-          .agg(sum("qd2").as("est_d2"))
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("est_d2").asc, col("vec_id").asc)
-        est.withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= TopK)
-          .selectExpr("query_id", "vec_id AS neighbor_id", "est_d2", "rn")
-          .orderBy("query_id", "rn")
+        estTopK(pq16Est(s, v, Some(homeCells(v))))
       },
-      s"""WITH $duckTrainedEbCte,
-         |v AS (
-         |  SELECT vec_id, ${DuckSql.quantVec("embedding", 1000000L)} AS v
-         |  FROM embeddings),
-         |$pqOracleTail,
-         |est AS (
-         |  SELECT q.query_id, k.vec_id, CAST(sum(q.qd2) AS BIGINT) AS est_d2
-         |  FROM codes k
-         |  JOIN qd q ON q.ss = k.ss AND q.cid = k.code
-         |  JOIN eb ck ON ck.vec_id = k.vec_id
-         |  JOIN eb cq ON cq.vec_id = q.query_id
-         |  WHERE ck.cell = cq.cell AND q.query_id <> k.vec_id
-         |  GROUP BY q.query_id, k.vec_id)
-         |SELECT query_id, neighbor_id, est_d2, rn FROM (
-         |  SELECT query_id, vec_id AS neighbor_id, est_d2,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY est_d2, vec_id) AS rn
-         |  FROM est) WHERE rn <= $TopK
-         |ORDER BY query_id, rn""".stripMargin),
+      duckEstTopK(
+        s"""$duckTrainedEbCte,
+           |$duckQuantV,
+           |$pqOracleTail,
+           |${duckAdcEst(duckSameCell("eb"))}""".stripMargin)),
 
     // The PRODUCTION-SHAPED IVF-PQ (r10): trained coarse cells + k=256
     // codes per subspace (one byte — the FAISS ceiling), CONSTANT-COST
@@ -3774,28 +3422,8 @@ object SimilarityQueries {
     // q_ann_ivfpq_trained's ADC shape: same-cell candidates, 4
     // byte-code lookups each, broadcast lookup table.
     "q_ann_ivfpq_trained256" -> QueryDef(
-      (s, d) => pq256TopK(pq256Est(s, trainedCells(s, d)
-        .selectExpr("vec_id",
-          s"${SparkSql.quantVec("embedding", 1000000L)} AS v", "cell"))),
-      s"""WITH $duckTrainedEbCte,
-         |v AS (
-         |  SELECT vec_id, ${DuckSql.quantVec("embedding", 1000000L)} AS v
-         |  FROM embeddings),
-         |$pqOracleTail256,
-         |est AS (
-         |  SELECT q.query_id, k.vec_id, CAST(sum(q.qd2) AS BIGINT) AS est_d2
-         |  FROM codes k
-         |  JOIN qd q ON q.ss = k.ss AND q.cid = k.code
-         |  JOIN eb ck ON ck.vec_id = k.vec_id
-         |  JOIN eb cq ON cq.vec_id = q.query_id
-         |  WHERE ck.cell = cq.cell AND q.query_id <> k.vec_id
-         |  GROUP BY q.query_id, k.vec_id)
-         |SELECT query_id, neighbor_id, est_d2, rn FROM (
-         |  SELECT query_id, vec_id AS neighbor_id, est_d2,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY est_d2, vec_id) AS rn
-         |  FROM est) WHERE rn <= $TopK
-         |ORDER BY query_id, rn""".stripMargin),
+      (s, d) => estTopK(pq256Est(s, quantCells(trainedCells(s, d)))),
+      duckEstTopK(duckPq256Ctes(duckTrainedEbCte, "eb"))),
 
     // RESIDUAL encoding on the TRAINED-256 book (r11) — the FAISS
     // production shape complete: IndexIVFPQ quantizes r = x −
@@ -3838,35 +3466,23 @@ object SimilarityQueries {
         val vr = e.join(cents.hint("SHUFFLE_HASH"), Seq("cell"))
           .selectExpr("vec_id", "zip_with(qv, cv, (a, b) -> a - b) AS v",
             "cell")
-        pq256TopK(pq256Est(s, vr))
+        estTopK(pq256Est(s, vr))
       },
-      s"""WITH $duckTrainedEbCte,
-         |qvv AS (SELECT vec_id, cell,
-         |    ${DuckSql.quantVec("embedding", 1000000L)} AS qv
-         |  FROM eb),
-         |cm AS MATERIALIZED (SELECT cell, list(c ORDER BY dd) AS cv FROM (
-         |    SELECT cell, dd, CAST(sum(qv[dd]) // count(*) AS BIGINT) AS c
-         |    FROM qvv CROSS JOIN generate_series(1, 64) t(dd)
-         |    GROUP BY cell, dd)
-         |  GROUP BY cell),
-         |v AS (
-         |  SELECT q.vec_id, ${DuckSql.zipSubBig("q.qv", "cm.cv")} AS v
-         |  FROM qvv q JOIN cm ON cm.cell = q.cell),
-         |$pqOracleTail256,
-         |est AS (
-         |  SELECT q.query_id, k.vec_id, CAST(sum(q.qd2) AS BIGINT) AS est_d2
-         |  FROM codes k
-         |  JOIN qd q ON q.ss = k.ss AND q.cid = k.code
-         |  JOIN eb ck ON ck.vec_id = k.vec_id
-         |  JOIN eb cq ON cq.vec_id = q.query_id
-         |  WHERE ck.cell = cq.cell AND q.query_id <> k.vec_id
-         |  GROUP BY q.query_id, k.vec_id)
-         |SELECT query_id, neighbor_id, est_d2, rn FROM (
-         |  SELECT query_id, vec_id AS neighbor_id, est_d2,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY est_d2, vec_id) AS rn
-         |  FROM est) WHERE rn <= $TopK
-         |ORDER BY query_id, rn""".stripMargin),
+      duckEstTopK(
+        s"""$duckTrainedEbCte,
+           |qvv AS (SELECT vec_id, cell,
+           |    ${DuckSql.quantVec("embedding", 1000000L)} AS qv
+           |  FROM eb),
+           |cm AS MATERIALIZED (SELECT cell, list(c ORDER BY dd) AS cv FROM (
+           |    SELECT cell, dd, CAST(sum(qv[dd]) // count(*) AS BIGINT) AS c
+           |    FROM qvv CROSS JOIN generate_series(1, 64) t(dd)
+           |    GROUP BY cell, dd)
+           |  GROUP BY cell),
+           |v AS (
+           |  SELECT q.vec_id, ${DuckSql.zipSubBig("q.qv", "cm.cv")} AS v
+           |  FROM qvv q JOIN cm ON cm.cell = q.cell),
+           |$pqOracleTail256,
+           |${duckAdcEst(duckSameCell("eb"))}""".stripMargin)),
 
     // EXACT RE-RANK on the production IVF-PQ (r12) — the final stage
     // of the FAISS query pipeline the family was missing (Jégou et
@@ -3891,25 +3507,10 @@ object SimilarityQueries {
     // matched candidate mass.
     "q_ann_ivfpq_rerank" -> QueryDef(
       (s, d) => {
-        val v = ScratchCache.scratch(trainedCells(s, d)
-          .selectExpr("vec_id",
-            s"${SparkSql.quantVec("embedding", 1000000L)} AS v", "cell"))
+        val v = ScratchCache.scratch(quantCells(trainedCells(s, d)))
         pqRerankTopK(v, pq256Est(s, v))
       },
-      duckPqRerankSql(
-        s"""$duckTrainedEbCte,
-           |v AS (
-           |  SELECT vec_id, ${DuckSql.quantVec("embedding", 1000000L)} AS v
-           |  FROM embeddings),
-           |$pqOracleTail256,
-           |est AS (
-           |  SELECT q.query_id, k.vec_id, CAST(sum(q.qd2) AS BIGINT) AS est_d2
-           |  FROM codes k
-           |  JOIN qd q ON q.ss = k.ss AND q.cid = k.code
-           |  JOIN eb ck ON ck.vec_id = k.vec_id
-           |  JOIN eb cq ON cq.vec_id = q.query_id
-           |  WHERE ck.cell = cq.cell AND q.query_id <> k.vec_id
-           |  GROUP BY q.query_id, k.vec_id)""".stripMargin)),
+      duckPqRerankSql(duckPq256Ctes(duckTrainedEbCte, "eb"))),
 
     // The COMPLETE production ANN serving query (r12) — all three
     // levers composed exactly as FAISS ships them: the margin-law
@@ -3928,29 +3529,19 @@ object SimilarityQueries {
     "q_ann_ivfpq_adaptive" -> QueryDef(
       (s, d) => {
         val e = ScratchCache.scratch(trainedAdaptiveCells(s, d,
-          AdaptNSupers, AdaptMaxProbes, AdaptEpsNum, AdaptEpsDen,
-          interleave = true))
-        val v = ScratchCache.scratch(e.selectExpr("vec_id",
-          s"${SparkSql.quantVec("embedding", 1000000L)} AS v", "cell"))
+          AdaptNSupers, AdaptMaxProbes, AdaptEpsNum, AdaptEpsDen))
+        val v = ScratchCache.scratch(quantCells(e))
         val qprobes = e.filter(col("vec_id") < PqQueries)
           .selectExpr("vec_id AS query_id", "explode(probes) AS qcell")
         pqRerankTopK(v, pq256Est(s, v, Some(qprobes)))
       },
       duckPqRerankSql(
         s"""$duckAdaptiveProbesCte,
-           |v AS (
-           |  SELECT vec_id, ${DuckSql.quantVec("embedding", 1000000L)} AS v
-           |  FROM embeddings),
+           |$duckQuantV,
            |$pqOracleTail256,
-           |est AS (
-           |  SELECT q.query_id, k.vec_id, CAST(sum(q.qd2) AS BIGINT) AS est_d2
-           |  FROM codes k
-           |  JOIN qd q ON q.ss = k.ss AND q.cid = k.code
-           |  JOIN eb ck ON ck.vec_id = k.vec_id
-           |  JOIN (SELECT vec_id, cell FROM aprobes) pq
-           |    ON pq.vec_id = q.query_id AND pq.cell = ck.cell
-           |  WHERE q.query_id <> k.vec_id
-           |  GROUP BY q.query_id, k.vec_id)""".stripMargin)),
+           |${duckAdcEst("JOIN eb ck ON ck.vec_id = k.vec_id " +
+              "JOIN (SELECT vec_id, cell FROM aprobes) pq " +
+              "ON pq.vec_id = q.query_id AND pq.cell = ck.cell")}""".stripMargin)),
 
     // The POST-CAP production composition (r12): the same ADC scan +
     // exact re-rank, routed by the THREE-LEVEL book — the regime past
@@ -3965,25 +3556,10 @@ object SimilarityQueries {
     // and oracle-gated.
     "q_ann_ivfpq_l3_rerank" -> QueryDef(
       (s, d) => {
-        val v = ScratchCache.scratch(trainedCellsL3(s, d)
-          .selectExpr("vec_id",
-            s"${SparkSql.quantVec("embedding", 1000000L)} AS v", "cell"))
+        val v = ScratchCache.scratch(quantCells(trainedCellsL3(s, d)))
         pqRerankTopK(v, pq256Est(s, v))
       },
-      duckPqRerankSql(
-        s"""$duckTrainedL3Cte,
-           |v AS (
-           |  SELECT vec_id, ${DuckSql.quantVec("embedding", 1000000L)} AS v
-           |  FROM embeddings),
-           |$pqOracleTail256,
-           |est AS (
-           |  SELECT q.query_id, k.vec_id, CAST(sum(q.qd2) AS BIGINT) AS est_d2
-           |  FROM codes k
-           |  JOIN qd q ON q.ss = k.ss AND q.cid = k.code
-           |  JOIN ebl3 ck ON ck.vec_id = k.vec_id
-           |  JOIN ebl3 cq ON cq.vec_id = q.query_id
-           |  WHERE ck.cell = cq.cell AND q.query_id <> k.vec_id
-           |  GROUP BY q.query_id, k.vec_id)""".stripMargin)),
+      duckPqRerankSql(duckPq256Ctes(duckTrainedL3Cte, "ebl3"))),
 
     // SCALAR QUANTIZATION (r12) — the THIRD quantizer family beside
     // flat and PQ (FAISS IndexIVFScalarQuantizer, QT_8bit): per-dim
@@ -4003,14 +3579,8 @@ object SimilarityQueries {
     // drift risk on ingest (min/max only widen); scoring stays a
     // same-cell hash join exactly like the flat family.
     "q_ann_ivf_sq8" -> QueryDef(
-      (s, d) => pq256TopK(sq8Est(s, d)),
-      s"""WITH $duckSq8EstCtes
-         |SELECT query_id, neighbor_id, est_d2, rn FROM (
-         |  SELECT query_id, vec_id AS neighbor_id, est_d2,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY est_d2, vec_id) AS rn
-         |  FROM est) WHERE rn <= $TopK
-         |ORDER BY query_id, rn""".stripMargin),
+      (s, d) => estTopK(sq8Est(s, d)),
+      duckEstTopK(duckSq8EstCtes)),
 
     // SQ8 with the exact re-rank tail — [[pqRerankTopK]] and the
     // oracle tail are estimator-agnostic (any est(query_id, vec_id,
@@ -4018,9 +3588,7 @@ object SimilarityQueries {
     // byte-coded scan, exact top-R re-score, exact final ordering.
     "q_ann_ivf_sq8_rerank" -> QueryDef(
       (s, d) => {
-        val v = ScratchCache.scratch(trainedCells(s, d)
-          .selectExpr("vec_id",
-            s"${SparkSql.quantVec("embedding", 1000000L)} AS v", "cell"))
+        val v = ScratchCache.scratch(quantCells(trainedCells(s, d)))
         pqRerankTopK(v, sq8EstFrom(s, v))
       },
       duckPqRerankSql(duckSq8EstCtes)),
@@ -4038,60 +3606,34 @@ object SimilarityQueries {
     "q_ann_ivfpq_probe2" -> QueryDef(
       (s, d) => {
         val v = pqQuantized(s, d)
-        val book = pqLearnBook(v)
-        val codes = pqCodes(v, book)
-        val q = v.filter(col("vec_id") < PqQueries)
-        val probes = q.selectExpr("vec_id AS query_id", "cell AS qcell")
-          .unionByName(q.selectExpr("vec_id AS query_id", "cell2 AS qcell"))
-        val qdist = pqQdist(s, v, book).join(probes, "query_id")
-        val est = codes.join(broadcast(qdist),
-            codes("ss") === qdist("ss") && codes("code") === qdist("cid") &&
-              codes("cell") === qdist("qcell"))
-          .filter(col("query_id") =!= col("vec_id"))
-          .groupBy("query_id", "vec_id")
-          .agg(sum("qd2").as("est_d2"))
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("est_d2").asc, col("vec_id").asc)
-        est.withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= TopK)
-          .selectExpr("query_id", "vec_id AS neighbor_id", "est_d2", "rn")
-          .orderBy("query_id", "rn")
+        val probe2 = v.filter(col("vec_id") < PqQueries)
+          .selectExpr("vec_id AS query_id", "cell2 AS qcell")
+        estTopK(pq16Est(s, v, Some(homeCells(v).unionByName(probe2))))
       },
-      s"""WITH $pqOracleCtes,
-         |raw AS (
-         |  SELECT vec_id, ${ivfDists(DuckSql, "embedding")} AS dists
-         |  FROM embeddings),
-         |c1t AS (
-         |  SELECT vec_id, dists,
-         |    CAST(${argminPos(DuckSql, "dists")} AS INT) AS cell
-         |  FROM raw),
-         |c2t AS (
-         |  SELECT vec_id, cell,
-         |    CAST(${argminPos(DuckSql, "dists2")} AS INT) AS cell2 FROM (
-         |    SELECT vec_id, cell, list_transform(generate_series(1, $NCells),
-         |      ii -> CASE WHEN ii = cell THEN CAST('infinity' AS DOUBLE)
-         |            ELSE dists[ii] END) AS dists2
-         |    FROM c1t)),
-         |probes AS (
-         |  SELECT vec_id AS query_id, cell AS qcell FROM c2t
-         |  WHERE vec_id < $PqQueries
-         |  UNION ALL
-         |  SELECT vec_id AS query_id, cell2 AS qcell FROM c2t
-         |  WHERE vec_id < $PqQueries),
-         |est AS (
-         |  SELECT q.query_id, k.vec_id, CAST(sum(q.qd2) AS BIGINT) AS est_d2
-         |  FROM codes k
-         |  JOIN qd q ON q.ss = k.ss AND q.cid = k.code
-         |  JOIN c1t ck ON ck.vec_id = k.vec_id
-         |  JOIN probes p ON p.query_id = q.query_id AND p.qcell = ck.cell
-         |  WHERE q.query_id <> k.vec_id
-         |  GROUP BY q.query_id, k.vec_id)
-         |SELECT query_id, neighbor_id, est_d2, rn FROM (
-         |  SELECT query_id, vec_id AS neighbor_id, est_d2,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY est_d2, vec_id) AS rn
-         |  FROM est) WHERE rn <= $TopK
-         |ORDER BY query_id, rn""".stripMargin),
+      duckEstTopK(
+        s"""$pqOracleCtes,
+           |raw AS (
+           |  SELECT vec_id, ${ivfDists(DuckSql, "embedding")} AS dists
+           |  FROM embeddings),
+           |c1t AS (
+           |  SELECT vec_id, dists,
+           |    CAST(${argminPos(DuckSql, "dists")} AS INT) AS cell
+           |  FROM raw),
+           |c2t AS (
+           |  SELECT vec_id, cell,
+           |    CAST(${argminPos(DuckSql, "dists2")} AS INT) AS cell2 FROM (
+           |    SELECT vec_id, cell, list_transform(generate_series(1, $NCells),
+           |      ii -> CASE WHEN ii = cell THEN CAST('infinity' AS DOUBLE)
+           |            ELSE dists[ii] END) AS dists2
+           |    FROM c1t)),
+           |probes AS (
+           |  SELECT vec_id AS query_id, cell AS qcell FROM c2t
+           |  WHERE vec_id < $PqQueries
+           |  UNION ALL
+           |  SELECT vec_id AS query_id, cell2 AS qcell FROM c2t
+           |  WHERE vec_id < $PqQueries),
+           |${duckAdcEst("JOIN c1t ck ON ck.vec_id = k.vec_id " +
+              "JOIN probes p ON p.query_id = q.query_id AND p.qcell = ck.cell")}""".stripMargin)),
 
     // IVF-PQ with RESIDUAL encoding — the full IVFADC recipe (Jégou et
     // al., TPAMI'11 §IV): PQ codes quantize r = x − centroid(cell(x)),
@@ -4111,38 +3653,8 @@ object SimilarityQueries {
     "q_ann_ivfpq_res" -> QueryDef(
       (s, d) => {
         val vr = pqResidual(s, d)
-        val book = pqLearnBook(vr)
-        val codes = pqCodes(vr, book)
-        val qdist = pqQdist(s, vr, book)
-          .join(vr.filter(col("vec_id") < PqQueries)
-            .selectExpr("vec_id AS query_id", "cell AS qcell"), "query_id")
-        val est = codes.join(broadcast(qdist),
-            codes("ss") === qdist("ss") && codes("code") === qdist("cid") &&
-              codes("cell") === qdist("qcell"))
-          .filter(col("query_id") =!= col("vec_id"))
-          .groupBy("query_id", "vec_id")
-          .agg(sum("qd2").as("est_d2"))
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("est_d2").asc, col("vec_id").asc)
-        est.withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= TopK)
-          .selectExpr("query_id", "vec_id AS neighbor_id", "est_d2", "rn")
-          .orderBy("query_id", "rn")
+        estTopK(pq16Est(s, vr, Some(homeCells(vr))))
       },
-      s"""WITH $pqResOracleCtes,
-         |est AS (
-         |  SELECT q.query_id, k.vec_id, CAST(sum(q.qd2) AS BIGINT) AS est_d2
-         |  FROM codes k
-         |  JOIN qd q ON q.ss = k.ss AND q.cid = k.code
-         |  JOIN cellt0 ck ON ck.vec_id = k.vec_id
-         |  JOIN cellt0 cq ON cq.vec_id = q.query_id
-         |  WHERE ck.cell = cq.cell AND q.query_id <> k.vec_id
-         |  GROUP BY q.query_id, k.vec_id)
-         |SELECT query_id, neighbor_id, est_d2, rn FROM (
-         |  SELECT query_id, vec_id AS neighbor_id, est_d2,
-         |    ROW_NUMBER() OVER (PARTITION BY query_id
-         |      ORDER BY est_d2, vec_id) AS rn
-         |  FROM est) WHERE rn <= $TopK
-         |ORDER BY query_id, rn""".stripMargin)
+      duckEstTopK(s"$pqResOracleCtes,\n${duckAdcEst(duckSameCell("cellt0"))}"))
   )
 }

@@ -124,10 +124,6 @@ abstract class Dialect {
     * summation in both engines → bit-identical. */
   def dotDbl(a: String, b: String): String =
     foldDbl(zipMulDbl(a, b), "acc", "v", "acc + v")
-
-  /** Cosine similarity, computed with identical op order in both engines. */
-  def cosine(a: String, b: String): String =
-    s"(${dotDbl(a, b)} / sqrt(${dotDbl(a, a)} * ${dotDbl(b, b)}))"
 }
 
 object Dialect {

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (trainedAdaptiveCellsDist) vs the broadcast-kernel build
   * (trainedAdaptiveCells): same seeds, same margin law, same probe
   * order — the probe ARRAYS must be bit-identical element for
-  * element, in both probe orders (interleaved and distance-global).
+  * element.
   * What differs is state placement: the broadcast route holds all c
   * child seeds on the driver (TwoLevelProbesBroadcast needs the
   * top-nSupers child blocks in one place), the dist route only the
@@ -28,40 +28,37 @@ class AdaptiveDistSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     df.selectExpr("vec_id", "probes").collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
 
-  private def compare(interleave: Boolean): Unit = {
+  test("interleaved probe arrays are bit-identical between routes") {
     val one = probesOf(trainedAdaptiveCells(spark, sf, AdaptNSupers,
-      AdaptMaxProbes, AdaptEpsNum, AdaptEpsDen, interleave))
+      AdaptMaxProbes, AdaptEpsNum, AdaptEpsDen))
     ScratchCache.release()
     val dist = probesOf(trainedAdaptiveCellsDist(spark, sf, AdaptNSupers,
-      AdaptMaxProbes, AdaptEpsNum, AdaptEpsDen, interleave))
+      AdaptMaxProbes, AdaptEpsNum, AdaptEpsDen))
     ScratchCache.release()
     assert(one.nonEmpty)
     assert(dist.size === one.size, "dist route lost or duplicated rows")
     one.foreach { case (id, p) =>
-      assert(dist(id) === p, s"vec_id $id probes differ (interleave=" +
-        s"$interleave): broadcast $p, dist ${dist(id)}")
+      assert(dist(id) === p,
+        s"vec_id $id probes differ: broadcast $p, dist ${dist(id)}")
     }
     // non-degenerate: some rows must carry real extra probes, or the
     // equality would pass on all-home arrays
     assert(one.values.exists(_.length > 1), "no multi-probe rows")
   }
 
-  test("interleaved probe arrays are bit-identical between routes") {
-    compare(interleave = true)
-  }
-
   test("the no-margin epsNum sentinel survives the dist route") {
-    // ProbeTune's margin-off point passes epsNum = 10^6; h2 * 10^6
-    // overflows Long on real quantized distances (~10^13), which the
+    // epsNum = 10^6 is the no-margin end of the retention-vs-mass
+    // frontier the shipped knobs were chosen from (the chosen point is
+    // in SCALE_r10_clustered_ann_100x.json); h2 * 10^6 overflows Long
+    // on real quantized distances (~10^13), which the
     // broadcast kernel guards by saturating the bound — the dist
     // route's relational margin filter must apply the SAME guard or
     // ANSI mode throws ArithmeticException (and non-ANSI silently
     // strips every probe)
     val m = 1000000L
-    val one = probesOf(trainedAdaptiveCells(spark, sf, 2, 3, m, 1L, true))
+    val one = probesOf(trainedAdaptiveCells(spark, sf, 2, 3, m, 1L))
     ScratchCache.release()
-    val dist = probesOf(trainedAdaptiveCellsDist(spark, sf, 2, 3, m, 1L,
-      interleave = true))
+    val dist = probesOf(trainedAdaptiveCellsDist(spark, sf, 2, 3, m, 1L))
     ScratchCache.release()
     assert(dist.size === one.size)
     one.foreach { case (id, p) =>
@@ -70,20 +67,16 @@ class AdaptiveDistSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(one.values.exists(_.length > 1), "sentinel produced no probes")
   }
 
-  test("distance-ordered probe arrays are bit-identical between routes") {
-    compare(interleave = false)
-  }
-
   test("past the driver budget trainedAdaptiveCells takes the dist route") {
     val base = probesOf(trainedAdaptiveCells(spark, sf, AdaptNSupers,
-      AdaptMaxProbes, AdaptEpsNum, AdaptEpsDen, interleave = true))
+      AdaptMaxProbes, AdaptEpsNum, AdaptEpsDen))
     assert(TrainedBuildStats.lastRoute === "broadcast")
     val broadcastSeeds = TrainedBuildStats.lastDriverSeeds
     ScratchCache.release()
     spark.conf.set(MaxDriverSeedsKey, "1")
     try {
       val switched = probesOf(trainedAdaptiveCells(spark, sf, AdaptNSupers,
-        AdaptMaxProbes, AdaptEpsNum, AdaptEpsDen, interleave = true))
+        AdaptMaxProbes, AdaptEpsNum, AdaptEpsDen))
       assert(TrainedBuildStats.lastRoute === "dist",
         "budget=1 must delegate to the distributed build")
       assert(TrainedBuildStats.lastDriverSeeds < broadcastSeeds,
@@ -101,7 +94,7 @@ class AdaptiveDistSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("child blocks meet rows through a shuffle join, not a broadcast") {
     val dist = trainedAdaptiveCellsDist(spark, sf, AdaptNSupers,
-      AdaptMaxProbes, AdaptEpsNum, AdaptEpsDen, interleave = true)
+      AdaptMaxProbes, AdaptEpsNum, AdaptEpsDen)
     try {
       dist.collect()
       val outer = dist.queryExecution.executedPlan

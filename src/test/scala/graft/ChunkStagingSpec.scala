@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Path}
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The file-stream feeds stage their chunks through
@@ -11,19 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class ChunkStagingSpec extends AnyFunSuite {
   import SparkTestSession._
 
-  private lazy val tiny: String = {
-    val dir = s"${ProcScratch.base}/tiny_embeddings"
-    Files.createDirectories(Path.of(dir))
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents").foreach { t =>
-      val link = Path.of(dir, s"$t.parquet")
-      if (!Files.exists(link))
-        Files.createSymbolicLink(link, Path.of(sf, s"$t.parquet").toAbsolutePath)
-    }
-    spark.read.parquet(s"$sf/embeddings.parquet").filter("vec_id < 15")
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    dir
-  }
+  private lazy val tiny: String =
+    derivedFixture("tiny_embeddings")(_.filter("vec_id < 15"))
 
   private def rows(q: String): Set[String] =
     try SparkEntry.queries(q)(spark, tiny).collect().map(_.toString).toSet

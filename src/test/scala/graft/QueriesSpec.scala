@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Path}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,6 +25,24 @@ object SparkTestSession {
     s
   }
   val sf = "/root/testdata/sf0.001"
+
+  /** A copy of the sf0.001 fixture under this JVM's scratch whose
+    * embeddings table is `embeddings` applied to the original; every
+    * other table is a symlink to the original file. */
+  def derivedFixture(name: String)(embeddings: DataFrame => DataFrame)
+      : String = {
+    val dir = s"${ProcScratch.base}/$name"
+    Files.createDirectories(Path.of(dir))
+    Seq("region", "nation", "customer", "supplier", "part", "orders",
+      "lineitem", "events", "documents").foreach { t =>
+      val link = Path.of(dir, s"$t.parquet")
+      if (!Files.exists(link))
+        Files.createSymbolicLink(link, Path.of(sf, s"$t.parquet").toAbsolutePath)
+    }
+    embeddings(spark.read.parquet(s"$sf/embeddings.parquet"))
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    dir
+  }
 }
 
 /** Every declared query runs end-to-end on sf0.001 and returns rows. */
